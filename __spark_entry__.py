@@ -1505,6 +1505,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # Jaccard — what a human (or threshold tuner) audits before
         # trusting the banding parameters at corpus scale
         from uckg_spark.operators.dedup import minhash_lsh_pairs, shingle_rows
+        from uckg_spark.session import reuse
 
         docs = _t(spark, sf, "documents")
         pairs = minhash_lsh_pairs(docs, num_hashes=4, bands=2)
@@ -1516,11 +1517,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         sh = shingle_rows(docs, 3, "text", distinct=True).select(
             F.col("id").alias("doc_id"), F.col("token").alias("s"))
-        # sh feeds THREE consumers (sizes + both verify sides): truncate
-        # its lineage in local mode so the corpus-wide shingle kernel
-        # runs once, not three times (same idiom as setjoin._ordered_sets)
-        if spark.sparkContext.master.startswith("local"):
-            sh = sh.localCheckpoint(eager=False)
+        # sh feeds THREE consumers (sizes + both verify sides): reuse it
+        # so the corpus-wide shingle kernel runs once, not three times
+        # (same idiom as setjoin._ordered_sets)
+        sh = reuse(sh)
         sizes = sh.groupBy("doc_id").agg(
             F.count(F.lit(1)).cast("bigint").alias("n"))
         sa = sh.select(F.col("doc_id").alias("doc_a"), "s")

@@ -4,13 +4,19 @@ import glob
 import os
 import re
 
+import pytest
+
 REF_RE = re.compile(r"/root/reference/[A-Za-z0-9_./-]+?\.(?:py|ttl|json|cypher|md|txt)")
+REF_ROOT = REF_RE.pattern.split("[", 1)[0]
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+@pytest.mark.skipif(not os.path.isdir(REF_ROOT),
+                    reason=f"reference tree {REF_ROOT} is not checked out")
 def test_reference_citations_resolve():
     missing = []
-    for path in glob.glob("/root/repo/uckg_spark/**/*.py", recursive=True) \
-            + glob.glob("/root/repo/*.py"):
+    for path in glob.glob(f"{REPO}/uckg_spark/**/*.py", recursive=True) \
+            + glob.glob(f"{REPO}/*.py"):
         src = open(path, encoding="utf-8").read()
         for cited in set(REF_RE.findall(src)):
             if not os.path.exists(cited):

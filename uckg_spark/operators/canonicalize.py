@@ -38,6 +38,8 @@ from typing import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import reuse
+
 _MAP_SCHEMA = "node string, rep string"
 
 
@@ -91,7 +93,6 @@ def connected_components(
 
     # canonical undirected form: (u, v) with u < v, self-loops dropped,
     # deduped — union-find needs each link once, not both directions
-    is_local = spark.sparkContext.master.startswith("local")
     E = (
         edges.select(
             F.least("src", "dst").alias("u"),
@@ -100,18 +101,17 @@ def connected_components(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    # local mode: non-eager localCheckpoint instead of persist — the
-    # count below materializes it either way, but a checkpointed E needs
-    # no unpersist bookkeeping, so the single-partition fast path can
-    # return its mapping LAZILY (no final persist+count job just to
-    # release E — one serial Spark job cut from every small-graph CC
-    # consumer). Clusters keep the replayable persist.
-    E = E.localCheckpoint(eager=False) if is_local else E.persist()
+    # the count below materializes E either way, but a checkpointed
+    # (uncached) E needs no unpersist bookkeeping, so the single-partition
+    # fast path can return its mapping LAZILY (no final persist+count job
+    # just to release E — one serial Spark job cut from every small-graph
+    # CC consumer)
+    E = reuse(E)
     n_cur = E.count()
 
     mapping: DataFrame | None = None  # node → current rep, all orig nodes
     cur = E
-    persisted = [] if is_local else [E]
+    persisted = [E] if E.is_cached else []
     for _ in range(max_iter):
         if n_cur == 0:
             break

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import reuse
+
 
 def h32(c: Column) -> Column:
     """Portable 32-bit hash: first 8 hex chars of md5 as a bigint.
@@ -214,11 +216,9 @@ def ngram_jaccard_pairs(
     """
     sh = shingle_rows(docs, n, text_col, distinct=True).select(
         F.col("id").alias("doc_id"), F.col("token").alias("sh"))
-    # sh feeds THREE consumers (sizes + both join sides): truncate its
-    # lineage in local mode so the shingle kernel runs once (the
-    # setjoin._ordered_sets idiom; persist on a cluster)
-    if docs.sparkSession.sparkContext.master.startswith("local"):
-        sh = sh.localCheckpoint(eager=False)
+    # sh feeds THREE consumers (sizes + both join sides): reuse it so
+    # the shingle kernel runs once (the setjoin._ordered_sets idiom)
+    sh = reuse(sh)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a = sh.alias("a")
     b = sh.alias("b")

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import reuse
+
 
 def _distinct_elements(
     df: DataFrame, text_col: str, id_col: str, shingle_n: int | None
@@ -101,12 +103,9 @@ def _ordered_sets(
         )
     )
     # `ordered` feeds THREE consumers (prefix + both verify sides):
-    # truncate its lineage in local mode so the tokenize+sort subtree
-    # runs once (A/B at sf0.1: 17.5→15.0 s cold, 7.6→7.1 s warm); on a
-    # cluster persist it instead — it is the natural reuse point.
-    if df.sparkSession.sparkContext.master.startswith("local"):
-        ordered = ordered.localCheckpoint(eager=False)
-    return ordered
+    # reuse it so the tokenize+sort subtree runs once (A/B at sf0.1:
+    # 17.5→15.0 s cold, 7.6→7.1 s warm)
+    return reuse(ordered)
 
 
 def similarity_join(

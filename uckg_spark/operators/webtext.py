@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import reuse
 from .dedup import shingles, tokens
 
 E6 = 1000000
@@ -187,11 +188,9 @@ def remove_duplicated_spans(
     spans = shingle_rows(docs, n, text_col, pos=True).select(
         F.col("id").alias("doc_id"), "pos", F.col("token").alias("shingle"))
     # spans feeds BOTH the duplicated-span count and the probe side of
-    # the semi join: truncate its lineage in local mode so the shingle
-    # kernel runs once (the _ordered_sets idiom, operators/setjoin.py);
-    # on a cluster persist it instead — it is the natural reuse point
-    if docs.sparkSession.sparkContext.master.startswith("local"):
-        spans = spans.localCheckpoint(eager=False)
+    # the semi join: reuse it so the shingle kernel runs once (the
+    # _ordered_sets idiom, operators/setjoin.py)
+    spans = reuse(spans)
     dup = (
         spans.groupBy("shingle")
         .agg(F.countDistinct("doc_id").alias("n_docs"))

@@ -22,8 +22,8 @@ Execution shape at 100 TB:
   own keys; AQE splits hot-entity skew (popular CVEs are exactly the
   high-in-degree nodes that skew the agg side).
 - out-degrees are computed once and reused every iteration.
-- rank lineage is truncated every few iterations (localCheckpoint in
-  local mode) so Catalyst does not re-optimize an ever-deepening plan —
+- rank lineage is truncated every few iterations (``session.reuse``)
+  so Catalyst does not re-optimize an ever-deepening plan —
   same discipline as operators/canonicalize.py::connected_components.
 """
 
@@ -31,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import reuse
 
 # fixed-point scale: initial rank mass per node
 _SCALE = 1_000_000
@@ -91,21 +93,12 @@ def pagerank_fixed(
     # exchange/broadcast stage per step for a value that never changes)
     e2 = e.join(deg, e.src == deg.node).select(
         F.col("src").alias("node"), "dst", "outdeg")
-    is_local_m = e2.sparkSession.sparkContext.master.startswith("local")
     if iterations > 0:
-        # non-eager localCheckpoint, not persist: both truncate the
-        # shared subtree, but persist adds an InMemoryRelation
-        # materialization barrier per frame while the checkpoint rides
-        # the first consumer (A/B at sf0.1, 3 iters: persist 3.6-10.0 s,
-        # bare 3.6-4.1 s — ReuseExchange already shares the distinct —
-        # checkpoint 2.9-3.3 s). On a cluster a lost executor cannot
-        # recompute truncated lineage, so keep the replayable persist.
-        if is_local_m:
-            e2 = e2.localCheckpoint(eager=False)
-            nodes = nodes.localCheckpoint(eager=False)
-        else:
-            e2 = e2.persist()
-            nodes = nodes.persist()
+        # e2 and nodes feed every iteration (A/B at sf0.1, 3 iters, local
+        # mode: persist 3.6-10.0 s, bare 3.6-4.1 s — ReuseExchange
+        # already shares the distinct — non-eager checkpoint 2.9-3.3 s)
+        e2 = reuse(e2)
+        nodes = reuse(nodes)
 
     seed_mask = (
         F.col("node").isin(list(seeds)).cast("bigint")
@@ -114,7 +107,6 @@ def pagerank_fixed(
     )
     ranks = nodes.withColumn(
         "rank", (F.lit(_SCALE) * seed_mask).cast("bigint"))
-    is_local = is_local_m
     # per-node zero contribution rows, unioned under the incoming-mass
     # aggregation: sum(contribs ∪ {0 per node}) ≡ coalesce(sum, 0) over
     # all nodes, so the old nodes⋈incoming LEFT join disappears — each
@@ -142,8 +134,8 @@ def pagerank_fixed(
         # truncate lineage periodically: Catalyst re-optimizes the whole
         # nested plan stack every iteration otherwise (measured on the CC
         # loop: per-iteration wall tripled by iter 4 without truncation)
-        if is_local and (k + 1) % checkpoint_every == 0 and k + 1 < iterations:
-            ranks = ranks.localCheckpoint(eager=False)
+        if (k + 1) % checkpoint_every == 0 and k + 1 < iterations:
+            ranks = reuse(ranks)
 
     return ranks
 
@@ -319,10 +311,8 @@ def kcore(
     frame feeds BOTH the next degree agg and both semi-join sides, and
     the recompute chain deepens multiplicatively — an A/B at sf0.1
     measured the fully-lazy form ~1.5-3.7x slower than truncating edge
-    lineage each round, so in local mode ``e`` is localCheckpoint'ed
-    (non-eager) per round; on a cluster the lazy form runs as-is (swap
-    in a replicated persist if chains deepen — the kg_pipeline
-    fallback). High-degree hubs are never hot: the degree agg combines
+    lineage each round, so ``e`` goes through ``session.reuse`` between
+    rounds. High-degree hubs are never hot: the degree agg combines
     map-side and the semi-join's build side shrinks every round.
     """
     if k < 1:
@@ -346,7 +336,6 @@ def kcore(
             .agg(F.count(F.lit(1)).cast("bigint").alias("core_deg"))
         )
 
-    is_local = edges.sparkSession.sparkContext.master.startswith("local")
     for r in range(rounds):
         # peel by ANTI-joining the LOW-degree frontier instead of
         # semi-joining the survivors: the peeled set is the small side
@@ -364,8 +353,8 @@ def kcore(
         # one consumer — checkpointing it just adds a serial
         # materialization job (A/B at sf0.1: all-rounds 2.22 s,
         # no-last 1.77 s, none 3.72 s warm)
-        if is_local and r + 1 < rounds:
-            e = e.localCheckpoint(eager=False)
+        if r + 1 < rounds:
+            e = reuse(e)
     return degrees(e)
 
 
@@ -391,11 +380,10 @@ def label_propagation(
     neighbor labels, one (node,label) count agg, one per-node arg-min —
     all map-side-combinable hash aggregations on data keys; hot nodes
     are AQE skew-split. The vote pick uses min(struct(-cnt, label)):
-    one aggregate, no window sort. In local mode the undirected edge
-    frame and each round's labels are localCheckpoint'ed (non-eager):
-    und feeds every round twice and labels chain multiplicatively —
-    A/B at sf0.1: 15.0→6.7 s cold, 5.1→4.4 s warm (same kcore finding;
-    on a cluster swap in a replicated persist if chains deepen).
+    one aggregate, no window sort. The undirected edge frame and every
+    second round's labels go through ``session.reuse``: und feeds every
+    round twice and labels chain multiplicatively — A/B at sf0.1:
+    15.0→6.7 s cold, 5.1→4.4 s warm (same kcore finding).
     """
     if rounds < 0:
         raise ValueError(f"rounds must be >= 0, got {rounds}")
@@ -407,9 +395,8 @@ def label_propagation(
     und = e.unionByName(
         e.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).distinct()
-    is_local = edges.sparkSession.sparkContext.master.startswith("local")
-    if is_local and rounds > 0:
-        und = und.localCheckpoint(eager=False)
+    if rounds > 0:
+        und = reuse(und)
     labels = (
         und.select(F.col("a").alias("node"))
         .distinct()
@@ -451,8 +438,8 @@ def label_propagation(
         # the bench's rounds=2 no labels checkpoint fires at all (A/B at
         # sf0.1 warm: every-round 2.77 s, und-only 2.18 s; cold 9.4 s
         # vs 3.1 s — the und checkpoint above is the one that pays).
-        if is_local and (r + 1) % 2 == 0 and r + 1 < rounds:
-            labels = labels.localCheckpoint(eager=False)
+        if (r + 1) % 2 == 0 and r + 1 < rounds:
+            labels = reuse(labels)
     return labels
 
 
@@ -729,18 +716,11 @@ def hits_fixed(
         .distinct()
     )
     if iterations > 1:
-        # same persist→localCheckpoint(eager=False) trade as
-        # pagerank_fixed (A/B at sf0.1, 2 iters: persist-both
-        # 4.4-14.0 s, bare 3.1-5.1 s, checkpoint 3.1-3.8 s — persist
-        # adds a materialization barrier per frame while ReuseExchange
-        # already shares the distinct); clusters keep the replayable
-        # persist.
-        if e.sparkSession.sparkContext.master.startswith("local"):
-            e = e.localCheckpoint(eager=False)
-            nodes = nodes.localCheckpoint(eager=False)
-        else:
-            e = e.persist()
-            nodes = nodes.persist()
+        # e and nodes feed every iteration, as in pagerank_fixed (A/B at
+        # sf0.1, 2 iters, local mode: persist-both 4.4-14.0 s, bare
+        # 3.1-5.1 s, non-eager checkpoint 3.1-3.8 s)
+        e = reuse(e)
+        nodes = reuse(nodes)
     hub = nodes.withColumn("h", F.lit(1_000_000).cast("bigint"))
     auth = None
     # totalize the LAST iteration's sums by unioning a zero row per node
@@ -900,7 +880,7 @@ def structural_pairs(
     full signature (bounded by the cap), then the intersection count
     as one (pair × neighbor) equi-join chain keyed on node then
     neighbor — per-pair cost tracks the nodes' degrees, never the
-    graph. The undirected adjacency is computed ONCE and persisted
+    graph. The undirected adjacency is computed ONCE and reused
     (the `_shared_sigs` idiom: identical plans across calls hit the
     same cache): it feeds four consumers (signatures, degrees, and both
     sides of the intersection scan), and without sharing each one
@@ -909,20 +889,15 @@ def structural_pairs(
     dominated by the verify joins, so the measured delta is inside host
     noise; the sharing is a cluster-scale argument (edge scans/shuffles
     scale with the corpus, the verify stage with |candidates|·degree).
-    MEMORY_AND_DISK by default, bounded by 2·|edges| rows.
+    Bounded by 2·|edges| rows.
     """
     if max_group_size < 2:
         raise ValueError("max_group_size must be >= 2")
     keys = [f"mh{j}" for j in range(num_hashes)]
     und = node_undirected(edges, subj, obj)
-    # non-eager localCheckpoint, not persist — same trade as
-    # pagerank/hits (A/B at sf0.1: persist 4.9-13.6 s, bare 3.4-4.7 s,
-    # checkpoint 3.5-4.0 s; the persist materialization barrier costs
-    # more than the reuse saves); clusters keep the replayable persist
-    if edges.sparkSession.sparkContext.master.startswith("local"):
-        und = und.localCheckpoint(eager=False)
-    else:
-        und = und.persist()
+    # und feeds four consumers (A/B at sf0.1, local mode: persist
+    # 4.9-13.6 s, bare 3.4-4.7 s, non-eager checkpoint 3.5-4.0 s)
+    und = reuse(und)
     sig = node_neighbor_minhash(edges, num_hashes, subj, obj, und=und)
     # candidate pairs by per-group combinations (guide §2.4): the
     # count prefilter stays (collect_list over an UNFILTERED group could

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..kernel import templates as T
 from ..operators.mentions import scan_pages
+from ..session import reuse
 from . import triples as PT
 
 P_EXPLOITS = T.UCO_BARE + "ucoexploitsVulnerability"  # decl uco2.ttl:45
@@ -31,37 +32,28 @@ P_EXPLOITS = T.UCO_BARE + "ucoexploitsVulnerability"  # decl uco2.ttl:45
 class KgDims:
     """All dimension DataFrames + alias rows, built once per job.
 
-    Every dim is ``localCheckpoint``-ed eagerly at construction:
-    ``spark.createDataFrame(local_rows)`` yields a Python-parallelized
-    ``Scan ExistingRDD`` whose every plan reference re-runs Python workers
-    to unpickle the rows, with the pickled partition data embedded in each
-    task binary. The R7 relationship subtree alone references the ATT&CK
-    dims 4+ times → hundreds of Python-eval tasks per broadcast subquery
-    (measured: 201-task broadcast stages, ~0.85 s/task deserialization,
-    G1 humongous allocations, and bimodal 2-5× wall variance from Python
-    worker-pool contention). After the checkpoint each dim is a stored
-    JVM-row scan: no Python re-eval, tiny task binaries. One-time cost
-    ~13 small jobs at init, amortized over the whole job. On a real
-    multi-executor cluster the dims would instead be read from parquet
-    reference tables (JVM-native scans) — same effect."""
+    Every dim goes through ``session.reuse`` and is counted at
+    construction: ``spark.createDataFrame(local_rows)`` yields a
+    Python-parallelized ``Scan ExistingRDD`` whose every plan reference
+    re-runs Python workers to unpickle the rows, with the pickled
+    partition data embedded in each task binary. The R7 relationship
+    subtree alone references the ATT&CK dims 4+ times → hundreds of
+    Python-eval tasks per broadcast subquery (measured: 201-task
+    broadcast stages, ~0.85 s/task deserialization, G1 humongous
+    allocations, and bimodal 2-5× wall variance from Python worker-pool
+    contention). After the count each dim is a stored JVM-row scan: no
+    Python re-eval, tiny task binaries. One-time cost two small jobs per
+    dim at init, amortized over the whole job. The rows are driver-held,
+    so a persisted dim lost with an executor is replayed from them. On a
+    real multi-executor cluster the dims would instead be read from
+    parquet reference tables (JVM-native scans) — same effect."""
 
     def __init__(self, spark: SparkSession):
         from ..fixtures import dicts as D
         from ..sources import dims as S
 
-        # localCheckpoint blocks live only on current executors: safe in
-        # local mode (one JVM, no executor loss), but on a real cluster a
-        # lost executor permanently loses dim blocks mid-job. There, dims
-        # come from parquet reference tables anyway; until then, fall back
-        # to a replicated persist that survives single-executor loss.
-        is_local = spark.sparkContext.master.startswith("local")
-
         def _mat(df):
-            if is_local:
-                return df.localCheckpoint(eager=True)
-            from pyspark import StorageLevel
-
-            df = df.persist(StorageLevel.MEMORY_AND_DISK_2)
+            df = reuse(df)
             df.count()
             return df
 

@@ -17,13 +17,22 @@ chosen for how it behaves on a 1000-executor cluster at 10^12-document scale:
   names, ~1k CWEs, ~600 techniques — SURVEY.md §4) are a few hundred MB at
   most in full production form and are explicitly broadcast() anyway; the
   threshold covers the derived alias/posting tables.
+
+Reuse policy: frames that feed several consumers (KgDims, graph-loop
+frames, shingle sets) go through :func:`reuse`, the one place that chooses
+between ``localCheckpoint`` and ``persist``. A ``localCheckpoint`` block
+lives only on its executor and its lineage is cut, so it is safe only when
+the driver and executors share one JVM (``local``, ``local[N]``); under any
+other master, ``local-cluster[...]`` included, the frame is persisted so a
+lost executor's blocks can be replayed from lineage.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def build_session(
@@ -78,13 +87,25 @@ def build_session(
     return b.getOrCreate()
 
 
+def reuse(df: DataFrame) -> DataFrame:
+    """Mark ``df`` for reuse by several consumers; lazy either way.
+
+    Single-JVM local mode: a non-eager ``localCheckpoint``, which cuts the
+    lineage and rides the first consumer's job with no materialization
+    barrier. Any other master: ``persist()``, because a checkpointed block
+    dies with its executor and cannot be recomputed (module docstring)."""
+    master = df.sparkSession.sparkContext.master
+    if master == "local" or master.startswith("local["):
+        return df.localCheckpoint(eager=False)
+    return df.persist()
+
+
 def _master_cores(master: str) -> int:
-    if master.startswith("local["):
-        inner = master[len("local[") : -1]
-        if inner == "*":
-            return os.cpu_count() or 8
-        try:
-            return int(inner)
-        except ValueError:
-            return 8
+    if master == "local":
+        return 1
+    if m := re.fullmatch(r"local\[(\*|\d+)(?:,\d+)?\]", master):
+        return (os.cpu_count() or 8) if m[1] == "*" else int(m[1])
+    # local-cluster[workers, cores per worker, MB per worker]
+    if m := re.fullmatch(r"local-cluster\[(\d+),(\d+),\d+\]", master):
+        return int(m[1]) * int(m[2])
     return 32
