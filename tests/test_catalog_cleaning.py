@@ -1,9 +1,6 @@
-"""Graph catalog (partitioned writes + manifest), F10 NaN scrub, A5/I3
-count-delta trigger."""
+"""Graph catalog (partitioned writes + manifest) and the A5/I3 count-delta
+trigger."""
 
-import math
-
-from uckg_spark.functions.cleaning import nan_to_null, trimmed
 from uckg_spark.lineage import LineageLog, needs_sync
 from uckg_spark.sources.catalog import GraphCatalog
 
@@ -82,19 +79,6 @@ def test_hot_pred_spreads_over_writers(spark, tmp_path):
         tmp_path / f"skewgraph/edges/snap-{snap}/pred=ucohasCVE_ID/*.parquet"))
     assert len(files) > 1, files
     assert cat.latest_snapshot("edges")["rows"] == 20000
-
-
-def test_nan_to_null(spark):
-    df = spark.createDataFrame(
-        [(1, float("nan")), (2, 3.5)], ["id", "v"])
-    out = nan_to_null(df).collect()
-    vals = {r["id"]: r["v"] for r in out}
-    assert vals[1] is None and vals[2] == 3.5
-
-
-def test_trimmed(spark):
-    df = spark.createDataFrame([(" a ",), ("b",)], ["k"])
-    assert sorted(r["k"] for r in trimmed(df, ["k"]).collect()) == ["a", "b"]
 
 
 def test_needs_sync(tmp_path):

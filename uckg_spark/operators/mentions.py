@@ -117,7 +117,7 @@ def scan_pages(
     over the JVM↔Python boundary — at 100 TB that boundary IS the pipe, so
     the fused kernel halves Arrow traffic vs extract_pages ∘
     detect_mentions (which remain available for stages that need the text
-    itself: byte-identity checks, lineage-checkpointed extraction)."""
+    itself: byte-identity checks, the streaming extractor)."""
     from ..kernel.extract import extract_text
 
     bc = spark.sparkContext.broadcast(LinkState(alias_rows))

@@ -147,13 +147,8 @@ def sync_kg(
 
     graph_cat.write_nodes(nodes, n_buckets=n_tasks)
 
-    # linked_mentions persists the mention stream + per-kind caches per
-    # call; a long-lived sync driver must release them or repeated syncs
-    # accumulate cache blocks
     triples.unpersist()
-    m["mentions"].unpersist()
-    for k in ("cve", "cwe", "capec", "cpe"):
-        m[k].unpersist()
+    m.unpersist()
 
     # -- record the synced pages snapshot (1-row versioned state) ------
     graph_cat.write_table(

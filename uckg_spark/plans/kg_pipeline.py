@@ -86,6 +86,13 @@ class MentionTables(dict):
         if fn is not None:
             fn()
 
+    def unpersist(self) -> None:
+        """Release the cached mention stream and per-kind tables (a no-op
+        for the lazy ones): a long-lived driver that links repeatedly
+        accumulates cache blocks otherwise."""
+        for df in self.values():
+            df.unpersist()
+
 
 def linked_mentions(
     spark: SparkSession, pages: DataFrame, dims: KgDims,
