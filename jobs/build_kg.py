@@ -49,13 +49,16 @@ def run(spark, pages: str, out: str, resume_root: str | None = None,
     else:
         m = linked_mentions(spark, pages_df, dims, mention_partitions,
                             defer_barrier=True)
+    triples = None
     try:
-        nodes, edges = materialize_graph(
-            build_triples(spark, None, dims, mentions=m))
+        triples = build_triples(spark, None, dims, mentions=m)
+        nodes, edges = materialize_graph(triples)
         cat = GraphCatalog(out)
         edge_snap = cat.write_edges(edges)
         node_snap = cat.write_nodes(nodes)
     finally:
+        if triples is not None:
+            triples.unpersist()
         m.unpersist()
     return {
         "edges_snapshot": edge_snap,

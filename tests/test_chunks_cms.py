@@ -4,7 +4,10 @@ exactness-under-any-sketch-config guarantees."""
 
 from collections import Counter
 
+from pyspark.sql import functions as F
+
 from uckg_spark.operators.corpus import sliding_chunks
+from uckg_spark.operators.dedup import tokens
 from uckg_spark.operators.sketches import cms_heavy_hitters
 
 
@@ -79,3 +82,15 @@ def test_cms_ignores_nulls(spark):
     got = {(r["value"], r["n"]) for r in
            cms_heavy_hitters(df, "value", threshold=2).collect()}
     assert got == {("a", 2)}
+
+
+def test_heavy_hitters_total_skips_null_text(spark):
+    """``heavy_hitters``' threshold total, ``sum(size(tokens(text)))``:
+    under the session's ANSI mode ``size(NULL)`` is NULL, not the legacy
+    -1, so a null text adds nothing instead of shrinking the total."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    docs = spark.createDataFrame(
+        [(1, "a b  c"), (2, None), (3, " d e "), (4, "")],
+        "doc_id long, text string")
+    total = docs.agg(F.sum(F.size(tokens(F.col("text"))))).collect()[0][0]
+    assert total == 5

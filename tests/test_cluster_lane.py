@@ -5,8 +5,9 @@ Every other test runs on the session fixture's ``local[4]``, where
 its own Spark in a subprocess (the fixture owns this process's
 SparkContext) on ``local-cluster[2,1,1024]``: two executor JVMs, so
 ``reuse`` persists. It runs the queries that reach every reuse point
-against their DuckDB twins, and ``KgDims`` + ``build_triples`` against the
-KG oracle.
+against their DuckDB twins, and ``KgDims`` + ``build_triples`` +
+``materialize_graph`` against the KG oracle's graph; the triple set
+``materialize_graph`` reuses must be cached until the caller releases it.
 
 Run alone: ``python tests/test_cluster_lane.py`` prints one JSON line.
 """
@@ -35,8 +36,10 @@ def _run_lane() -> dict:
     import __spark_entry__ as entry_mod
     from tools.check_entry import TABLES, value_hash
     from uckg_spark.fixtures.pages import generate_pages
-    from uckg_spark.oracle.kg_oracle import run_oracle
-    from uckg_spark.plans.kg_pipeline import KgDims, build_triples
+    from uckg_spark.oracle.kg_oracle import (
+        frame_graph, oracle_graph, run_oracle)
+    from uckg_spark.plans.kg_pipeline import (
+        KgDims, build_triples, materialize_graph)
     from uckg_spark.session import build_session, reuse
     from uckg_spark.sources.pages import pages_df
 
@@ -70,12 +73,21 @@ def _run_lane() -> dict:
         pages = generate_pages(80)
         dims = KgDims(spark)
         out["dims_cached"] = dims.cve.is_cached
-        got = {tuple(r) for r in
-               build_triples(spark, pages_df(spark, pages), dims).collect()}
+        triples = build_triples(spark, pages_df(spark, pages), dims)
+        nodes, edges = materialize_graph(triples)
+        out["triples_cached"] = triples.is_cached
+        got = {tuple(r) for r in triples.collect()}
+        got_edges, got_nodes = frame_graph(nodes, edges)
+        triples.unpersist()
+        out["triples_released"] = not triples.is_cached
         _, gold = run_oracle(pages)
-        gold = {tuple(t) for t in gold}
         out["triples"] = {"got": len(got), "gold": len(gold),
-                          "match": got == gold}
+                          "match": got == {tuple(t) for t in gold}}
+        gold_edges, gold_nodes = oracle_graph(gold)
+        out["graph"] = {
+            "edges": [len(got_edges), len(gold_edges)],
+            "nodes": [len(got_nodes), len(gold_nodes)],
+            "match": (got_edges, got_nodes) == (gold_edges, gold_nodes)}
     finally:
         spark.stop()
     return out
@@ -95,7 +107,10 @@ def test_local_cluster_lane():
     assert res["reuse_cached"] and res["dims_cached"], res
     bad = {n: q for n, q in res["queries"].items() if not q["match"]}
     assert sorted(res["queries"]) == sorted(QUERIES) and not bad, bad
+    # materialize_graph persisted the triple set; unpersist released it
+    assert res["triples_cached"] and res["triples_released"], res
     assert res["triples"]["match"], res["triples"]
+    assert res["graph"]["match"], res["graph"]
 
 
 if __name__ == "__main__":

@@ -237,3 +237,32 @@ def run_oracle(pages: list[dict], dicts: OracleDictionaries | None = None):
         m = page_mentions(text, dicts)
         triples += triples_for_page(m, dicts)
     return golden_text, E.repair_and_dedup(triples)
+
+
+def oracle_graph(triples) -> tuple[set, dict]:
+    """``materialize_graph`` over oracle triples, in plain Python:
+    (edges {(subj, pred, obj)}, nodes {uri: (sorted labels,
+    {pred: sorted values})})."""
+    edges = {(t.subj, t.pred, t.obj) for t in triples
+             if not t.obj_is_literal and t.pred != T.RDF_TYPE}
+    labels: dict[str, set] = {}
+    props: dict[str, dict[str, set]] = {}
+    for t in triples:
+        if t.pred == T.RDF_TYPE:
+            labels.setdefault(t.subj, set()).add(t.obj)
+        if t.obj_is_literal:
+            props.setdefault(t.subj, {}).setdefault(t.pred, set()).add(t.obj)
+    nodes = {uri: (sorted(labels.get(uri, ())),
+                   {p: sorted(v) for p, v in props.get(uri, {}).items()})
+             for uri in labels.keys() | props.keys()}
+    return edges, nodes
+
+
+def frame_graph(nodes, edges) -> tuple[set, dict]:
+    """The same (edges, nodes) shape, collected from Spark node and edge
+    frames (``materialize_graph``'s, or a catalog's read back)."""
+    return (
+        {tuple(r) for r in edges.select("subj", "pred", "obj").collect()},
+        {r["uri"]: (sorted(r["labels"]),
+                    {p: sorted(v) for p, v in r["props"].items()})
+         for r in nodes.collect()})

@@ -117,10 +117,9 @@ def sync_kg(
     m = linked_mentions(spark, None, dims,
                         mention_partitions=mention_partitions,
                         raw_mentions=store)
-    # persist the triple set: edges delta (two anti-join actions + two
-    # write commits) AND the nodes rebuild all consume it — unpersisted,
-    # each action re-runs the whole emission DAG
-    triples = build_triples(spark, None, dims, mentions=m).persist()
+    # materialize_graph reuses the triple set: the edge delta's actions
+    # and the nodes rebuild read it once computed; released below
+    triples = build_triples(spark, None, dims, mentions=m)
     nodes, edges = materialize_graph(triples)
 
     # -- edge delta: append additions, MoR-retract disappearances ------
@@ -129,20 +128,17 @@ def sync_kg(
     except FileNotFoundError:
         current = None
     if current is None:
-        edges_new = edges.persist()
-        n_add, n_rm = edges_new.count(), 0
-        graph_cat.write_edges(edges_new, n_tasks=n_tasks)
-        edges_new.unpersist()
+        n_add, n_rm = edges.count(), 0
+        graph_cat.write_edges(edges, n_tasks=n_tasks)
     else:
-        target = edges.persist()
-        adds = target.join(current, _EDGE_KEY, "left_anti").persist()
-        removes = current.join(target, _EDGE_KEY, "left_anti").persist()
+        adds = edges.join(current, _EDGE_KEY, "left_anti").persist()
+        removes = current.join(edges, _EDGE_KEY, "left_anti").persist()
         n_add, n_rm = adds.count(), removes.count()
         if n_rm:
             graph_cat.delete_rows("edges", removes, _EDGE_KEY)
         if n_add:
             graph_cat.write_edges(adds, n_tasks=n_tasks, mode="append")
-        for df in (adds, removes, target, current):
+        for df in (adds, removes, current):
             df.unpersist()
 
     graph_cat.write_nodes(nodes, n_buckets=n_tasks)

@@ -529,7 +529,19 @@ def materialize_graph(triples: DataFrame) -> tuple[DataFrame, DataFrame]:
     (/root/reference/neo4j/import/init.cypher:1-20). Round 1 took min(obj)
     per predicate and silently dropped the rest.
     edges(subj, pred, obj) — URI-object triples, pred-partitionable.
+
+    The triple set is the one fan-out point of a build: both tables derive
+    from it, so it passes through ``reuse`` and is computed once, not once
+    per table write. The caller releases it with ``triples.unpersist()``
+    (on a cluster master ``reuse`` persisted that very frame; in local mode
+    the call is a no-op). Reuse here is safe only because ``build_triples``
+    has already joined the scan barrier: under AQE a ``localCheckpoint``
+    runs the plan's query stages when it is called (the reason
+    ``linked_mentions`` rejects it for the scan), and with the barrier
+    joined nothing is left to overlap, so running the emission here costs
+    nothing.
     """
+    triples = reuse(triples)
     edges = (
         triples.filter(~F.col("obj_is_literal") & (F.col("pred") != T.RDF_TYPE))
         .select("subj", "pred", "obj")
