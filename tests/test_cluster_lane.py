@@ -6,8 +6,9 @@ its own Spark in a subprocess (the fixture owns this process's
 SparkContext) on ``local-cluster[2,1,1024]``: two executor JVMs, so
 ``reuse`` persists. It runs the queries that reach every reuse point
 against their DuckDB twins, and ``KgDims`` + ``build_triples`` +
-``materialize_graph`` against the KG oracle's graph; the triple set
-``materialize_graph`` reuses must be cached until the caller releases it.
+``materialize_graph`` against the KG oracle's graph; every dim must plan
+as a ``LocalTableScan``, and the triple set ``materialize_graph`` reuses
+must be cached until the caller releases it.
 
 Run alone: ``python tests/test_cluster_lane.py`` prints one JSON line.
 """
@@ -32,6 +33,7 @@ QUERIES = [
 
 def _run_lane() -> dict:
     import duckdb
+    from pyspark.sql import DataFrame
 
     import __spark_entry__ as entry_mod
     from tools.check_entry import TABLES, value_hash
@@ -72,7 +74,10 @@ def _run_lane() -> dict:
 
         pages = generate_pages(80)
         dims = KgDims(spark)
-        out["dims_cached"] = dims.cve.is_cached
+        out["dims_local"] = all(
+            d._jdf.queryExecution().executedPlan().nodeName()
+            == "LocalTableScan"
+            for d in vars(dims).values() if isinstance(d, DataFrame))
         triples = build_triples(spark, pages_df(spark, pages), dims)
         nodes, edges = materialize_graph(triples)
         out["triples_cached"] = triples.is_cached
@@ -104,7 +109,9 @@ def test_local_cluster_lane():
     assert res["master"] == MASTER
     assert res["shuffle_partitions"] == "8"  # 2 workers × 1 core → 2·2, floor 8
     # the lane ran the cluster half: reuse persisted instead of checkpointing
-    assert res["reuse_cached"] and res["dims_cached"], res
+    assert res["reuse_cached"], res
+    # the dims are driver-held local relations, on a cluster too
+    assert res["dims_local"], res
     bad = {n: q for n, q in res["queries"].items() if not q["match"]}
     assert sorted(res["queries"]) == sorted(QUERIES) and not bad, bad
     # materialize_graph persisted the triple set; unpersist released it

@@ -47,3 +47,16 @@ def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0
     assert df.columns == ["r_name", "l_returnflag", "revenue", "n_items"]
+
+
+def test_table_schema_follows_a_rewrite(spark, tmp_path):
+    """``_t`` caches a table's schema by path and mtime: a table rewritten
+    with another schema under the same path is read with the new one."""
+    path = str(tmp_path / "t.parquet")
+    spark.createDataFrame([(1,)], "a int").write.parquet(path)
+    assert entry_mod._t(spark, str(tmp_path), "t").columns == ["a"]
+    spark.createDataFrame([("x", 2)], "b string, c long") \
+        .write.mode("overwrite").parquet(path)
+    df = entry_mod._t(spark, str(tmp_path), "t")
+    assert df.columns == ["b", "c"]
+    assert [tuple(r) for r in df.collect()] == [("x", 2)]

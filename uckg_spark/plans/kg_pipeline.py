@@ -30,41 +30,21 @@ P_EXPLOITS = T.UCO_BARE + "ucoexploitsVulnerability"  # decl uco2.ttl:45
 
 
 class KgDims:
-    """All dimension DataFrames + alias rows, built once per job.
-
-    Every dim goes through ``session.reuse`` and is counted at
-    construction: ``spark.createDataFrame(local_rows)`` yields a
-    Python-parallelized ``Scan ExistingRDD`` whose every plan reference
-    re-runs Python workers to unpickle the rows, with the pickled
-    partition data embedded in each task binary. The R7 relationship
-    subtree alone references the ATT&CK dims 4+ times → hundreds of
-    Python-eval tasks per broadcast subquery (measured: 201-task
-    broadcast stages, ~0.85 s/task deserialization, G1 humongous
-    allocations, and bimodal 2-5× wall variance from Python worker-pool
-    contention). After the count each dim is a stored JVM-row scan: no
-    Python re-eval, tiny task binaries. One-time cost two small jobs per
-    dim at init, amortized over the whole job. The rows are driver-held,
-    so a persisted dim lost with an executor is replayed from them. On a
-    real multi-executor cluster the dims would instead be read from
-    parquet reference tables (JVM-native scans) — same effect."""
+    """All dimension DataFrames + alias rows, built once per job. Each dim
+    is a driver-held local relation (``sources/dims.py``): no job builds
+    it and nothing needs materializing before it is broadcast."""
 
     def __init__(self, spark: SparkSession):
         from ..fixtures import dicts as D
         from ..sources import dims as S
 
-        def _mat(df):
-            df = reuse(df)
-            df.count()
-            return df
-
-        self.cve = _mat(S.dim_cve(spark))
-        self.cwe = _mat(S.dim_cwe(spark))
-        self.cpe = _mat(S.dim_cpe(spark))
-        self.cpe_vp = _mat(S.dim_cpe_by_vendor_product(spark))
-        ents, rels = S.dim_attack(spark)
-        self.attack_ents, self.attack_rels = _mat(ents), _mat(rels)
-        self.capec = _mat(S.dim_capec(spark))
-        self.d3fend = _mat(S.dim_d3fend(spark))
+        self.cve = S.dim_cve(spark)
+        self.cwe = S.dim_cwe(spark)
+        self.cpe = S.dim_cpe(spark)
+        self.cpe_vp = S.dim_cpe_by_vendor_product(spark)
+        self.attack_ents, self.attack_rels = S.dim_attack(spark)
+        self.capec = S.dim_capec(spark)
+        self.d3fend = S.dim_d3fend(spark)
         self.alias_rows = D.alias_table()
 
 
@@ -123,10 +103,7 @@ def linked_mentions(
     variant was measured and REJECTED: under AQE, ``Dataset.checkpoint``
     pre-executes the adaptive plan inside ``toRdd`` — the full page scan ran
     serially on the driver thread at wrapper-construction time, costing
-    ~187 s at 720k pages before any overlap could start. The slow-mode
-    pathology that motivated it — multi-second task-binary deserialization
-    storms — was actually caused by Python-parallelized dim RDDs and is
-    fixed at the source in ``KgDims``.)
+    ~187 s at 720k pages before any overlap could start.)
     """
     mentions = (raw_mentions if raw_mentions is not None
                 else scan_pages(spark, pages, dims.alias_rows))

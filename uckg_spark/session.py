@@ -18,8 +18,8 @@ chosen for how it behaves on a 1000-executor cluster at 10^12-document scale:
   most in full production form and are explicitly broadcast() anyway; the
   threshold covers the derived alias/posting tables.
 
-Reuse policy: frames that feed several consumers (KgDims, graph-loop
-frames, shingle sets) go through :func:`reuse`, the one place that chooses
+Reuse policy: frames that feed several consumers (the KG triple set,
+graph-loop frames, shingle sets) go through :func:`reuse`, the one place that chooses
 between ``localCheckpoint`` and ``persist``. A ``localCheckpoint`` block
 lives only on its executor and its lineage is cut, so it is safe only when
 the driver and executors share one JVM (``local``, ``local[N]``); under any

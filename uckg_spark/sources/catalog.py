@@ -68,6 +68,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as Ty
 
 
 class CommitConflictError(RuntimeError):
@@ -161,12 +162,13 @@ def _collect_file_stats(abs_dir: str) -> dict:
     without scanning any data pages (footer metadata only, so the cost
     per commit is O(files), not O(rows)).
 
-    Only numeric and string leaf columns get stats (timestamps/binary/
-    nested are skipped — a missing column is simply never pruned on,
-    which is the safe direction). Files inside partition subdirectories
+    Only numeric and string leaf columns get stats (timestamps,
+    decimals, binary and nested are skipped — a missing column is
+    simply never pruned on, which is the safe direction). Files inside partition subdirectories
     (``key=value`` path segments) are skipped too: reading individual
     leaf files would lose the partition column, so partitioned layouts
     keep whole-dir scans (they already prune by directory)."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     out: dict[str, dict] = {}
@@ -188,18 +190,22 @@ def _collect_file_stats(abs_dir: str) -> dict:
                 col = md.row_group(rg).column(ci)
                 name = col.path_in_schema
                 st = col.statistics
-                if (st is None or not st.has_min_max
-                        or not isinstance(st.min, (int, float, str))
-                        or isinstance(st.min, bool)):
+                try:
+                    lo, hi = ((st.min, st.max) if st is not None
+                              and st.has_min_max else (None, None))
+                except pa.ArrowNotImplementedError:  # e.g. INT64 decimals
+                    lo = hi = None
+                if (not isinstance(lo, (int, float, str))
+                        or isinstance(lo, bool)):
                     cols.pop(name, None)
                     ok.discard(name)
                     continue
                 if rg == 0:
-                    cols[name] = [st.min, st.max]
+                    cols[name] = [lo, hi]
                     ok.add(name)
                 elif name in ok:
-                    cols[name][0] = min(cols[name][0], st.min)
-                    cols[name][1] = max(cols[name][1], st.max)
+                    cols[name][0] = min(cols[name][0], lo)
+                    cols[name][1] = max(cols[name][1], hi)
         # a column must have stats in EVERY row group to be prunable
         cols = {c: v for c, v in cols.items() if c in ok}
         if md.num_rows == 0:
@@ -489,13 +495,15 @@ class GraphCatalog:
     def _write_delete_dir_local(self, table: str, data_abs_dir: str,
                                 key_cols: list[str]) -> tuple[str, int]:
         """Driver-side twin of :meth:`_write_delete_dir` for small MoR
-        merges: read ONLY the key columns of the just-written data dir
-        with pyarrow (local files, column-pruned), distinct them, and
-        write the keys-only delete parquet directly — no Spark job.
-        Bit-compatible with the distributed path: same schema (pyarrow
-        round-trips the types Spark just wrote), same set semantics
-        (``group_by`` dedup), and the reader side is a plain
-        ``spark.read.parquet`` either way."""
+        merges of flat keys: read ONLY the key columns of the
+        just-written data dir with pyarrow (local files, column-pruned),
+        distinct them, and write the keys-only delete parquet directly —
+        no Spark job. Same set semantics as the distributed path
+        (``group_by`` dedup), read back by a plain ``spark.read.parquet``
+        either way. Spark writes timestamps as INT96, which pyarrow reads
+        as nanoseconds; they are written back as microseconds, the unit
+        Spark reads. (pyarrow cannot group nested keys: those merges take
+        the Spark path.)"""
         import pyarrow.parquet as pq
 
         keys = pq.read_table(data_abs_dir, columns=list(key_cols))
@@ -504,7 +512,7 @@ class GraphCatalog:
         abs_dir = os.path.join(self.root, rel)
         os.makedirs(abs_dir, exist_ok=True)
         pq.write_table(uniq, os.path.join(abs_dir, "part-00000.parquet"),
-                       compression="zstd")
+                       compression="zstd", coerce_timestamps="us")
         return rel, uniq.num_rows
 
     def delete_rows(self, name: str,
@@ -584,8 +592,8 @@ class GraphCatalog:
 
         Duplicate keys WITHIN ``updates`` are the caller's contract
         violation (which row wins would be nondeterministic) — dedupe
-        with a latest-wins window first (e.g. ``scd2_history``'s collapse
-        or ``sources/dims.py``'s window_dedup).
+        latest-wins first (e.g. ``scd2_history``'s collapse or
+        ``sources/dims.py``'s ``latest_rows``).
 
         Scale shape, ``strategy="cow"`` (default): one anti-join
         shuffled on the merge key + the rewrite. COW rewrites the whole
@@ -688,7 +696,11 @@ class GraphCatalog:
         # delete file is a key SET; at 1M single-column keys it is a few
         # MB, the same budget class as a broadcast build side). Larger
         # merges keep the distributed path.
-        if n_updates <= _MOR_DRIVER_DELETE_MAX_ROWS:
+        flat = not any(
+            isinstance(updates.schema[c].dataType,
+                       (Ty.ArrayType, Ty.MapType, Ty.StructType))
+            for c in key_cols)
+        if flat and n_updates <= _MOR_DRIVER_DELETE_MAX_ROWS:
             del_rel, n_keys = self._write_delete_dir_local(
                 name, os.path.join(self.root, data_rel), key_cols)
         else:

@@ -3,11 +3,17 @@
 The reference's dictionaries are SQLite tables and JSON files consulted by
 point lookup (S7, /root/reference/data_collection/cve_collection.py:85-92,
 :261-287). Here they are small Spark DataFrames, broadcast at join time
-(SURVEY.md §2.4 J1/J2). Complex literals (the CPE titles language map, the
-CWE related_attack_patterns struct) are PRE-SERIALIZED driver-side with the
-shared kernel (``jsonenc``) so downstream emission is pure column selection
-— byte-identical to the oracle and free of per-row Python at scale (the
-dims are MBs; the corpus is the thing that's big).
+(SURVEY.md §2.4 J1/J2). Each dim is built on the driver as a
+``pyarrow.Table`` and handed to Spark whole, so it plans as a
+``LocalTableScan``: JVM-native, driver-held, run by no job and with
+nothing to materialize or replay. The A3 CPE upsert runs here too, in
+plain Python over the dictionary rows, so the CPE dims are local
+relations as well instead of windows that re-shuffle per reference.
+Complex literals (the CPE titles language map, the CWE
+related_attack_patterns struct) are PRE-SERIALIZED driver-side with the
+shared kernel (``jsonenc``) so downstream emission is pure column
+selection — byte-identical to the oracle and free of per-row Python at
+scale (the dims are MBs; the corpus is the thing that's big).
 
 Fixture-backed by default; a production deployment would load the same
 schemas from parquet/Iceberg dictionary tables.
@@ -17,9 +23,10 @@ from __future__ import annotations
 
 import json
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as Ty
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..fixtures import dicts as D
 from ..kernel.jsonenc import dumps_reference, titles_lang_map_literal
@@ -96,10 +103,8 @@ D3FEND_SCHEMA = _schema([
     ("off_tech_id", _S),
 ])
 
-ALIAS_SCHEMA = _schema([
-    ("surface_form", _S), ("canonical_id", _S), ("kind", _S),
-    ("prior", Ty.DoubleType()),
-])
+CPE_VP_SCHEMA = _schema(
+    [(f.name, f.dataType) for f in CPE_SCHEMA] + [("canonical_id", _S)])
 
 
 # ---------------------------------------------------------------------------
@@ -107,8 +112,38 @@ ALIAS_SCHEMA = _schema([
 # ---------------------------------------------------------------------------
 
 
-def dim_cpe_raw(spark: SparkSession) -> DataFrame:
-    """CPE dictionary incl. duplicate-key rows (pre-upsert)."""
+def _arrow_df(spark: SparkSession, rows: list[tuple],
+              schema: Ty.StructType) -> DataFrame:
+    """Driver rows (tuples in ``schema`` order) → a ``LocalTableScan``."""
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows],
+        schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
+
+
+def latest_rows(rows: list[tuple], key_cols: tuple[str, ...]) -> list[tuple]:
+    """A3 upsert-by-key: per ``key_cols`` value keep the CPE row with max
+    (lastModified, cpeNameId), a null ranking below any value — the row a
+    ``row_number()`` window ordered by both ``DESC NULLS LAST`` ranks 1.
+    Replaces the reference's completion-order INSERT OR REPLACE
+    (cve_collection.py:185-188). Python orders str by code point, Spark
+    by UTF-8 bytes: the same order."""
+    ix = [CPE_SCHEMA.names.index(c) for c in key_cols]
+    order = [CPE_SCHEMA.names.index(c) for c in ("lastModified", "cpeNameId")]
+
+    def recency(r):
+        return tuple((r[i] is not None, r[i]) for i in order)
+
+    best: dict[tuple, tuple] = {}
+    for r in rows:
+        k = tuple(r[i] for i in ix)
+        if k not in best or recency(r) > recency(best[k]):
+            best[k] = r
+    return list(best.values())
+
+
+def _cpe_rows() -> list[tuple]:
+    """CPE dictionary after the upsert by cpeName."""
     rows = []
     for r in D.dict_cpe():
         parts = r["cpeName"].split(":")
@@ -117,40 +152,18 @@ def dim_cpe_raw(spark: SparkSession) -> DataFrame:
             titles_lang_map_literal(json.loads(r["titles_json"])),
             parts[3], parts[4],
         ))
-    return spark.createDataFrame(rows, CPE_SCHEMA)
+    return latest_rows(rows, ("cpeName",))
 
 
 def dim_cpe(spark: SparkSession) -> DataFrame:
-    """A3 upsert-by-key as a deterministic window: keep max
-    (lastModified, cpeNameId) per cpeName — replaces the reference's
-    completion-order INSERT OR REPLACE (cve_collection.py:185-188)."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("cpeName").orderBy(
-        F.col("lastModified").desc(), F.col("cpeNameId").desc()
-    )
-    return (
-        dim_cpe_raw(spark)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return _arrow_df(spark, _cpe_rows(), CPE_SCHEMA)
 
 
 def dim_cpe_by_vendor_product(spark: SparkSession) -> DataFrame:
     """canonical vendor:product → latest cpe row (fuzzy-link target)."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("vendor", "product").orderBy(
-        F.col("lastModified").desc(), F.col("cpeNameId").desc()
-    )
-    return (
-        dim_cpe(spark)
-        .withColumn("canonical_id", F.concat_ws(":", "vendor", "product"))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    rows = [r + (f"{r[5]}:{r[6]}",)
+            for r in latest_rows(_cpe_rows(), ("vendor", "product"))]
+    return _arrow_df(spark, rows, CPE_VP_SCHEMA)
 
 
 def dim_cve(spark: SparkSession) -> DataFrame:
@@ -162,7 +175,7 @@ def dim_cve(spark: SparkSession) -> DataFrame:
         r["obtainAllPrivilege"], r["userInteractionRequired"],
         r["weakness_values"], r["configurations"], r["evaluatorSolution"],
     ) for r in D.dict_cve()]
-    return spark.createDataFrame(rows, CVE_SCHEMA)
+    return _arrow_df(spark, rows, CVE_SCHEMA)
 
 
 def dim_cwe(spark: SparkSession) -> DataFrame:
@@ -182,17 +195,19 @@ def dim_cwe(spark: SparkSession) -> DataFrame:
             [(e.get("cwe_id"), e.get("Reference"), e.get("Description"),
               e.get("Link")) for e in obs] if obs else None,
         ))
-    return spark.createDataFrame(rows, CWE_SCHEMA)
+    return _arrow_df(spark, rows, CWE_SCHEMA)
 
 
 def dim_attack(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
     ents, rels = D.dict_attack()
-    ent_df = spark.createDataFrame(
+    ent_df = _arrow_df(
+        spark,
         [(e["ID"], e["name"], e["description"], e["url"], e["domain"],
           e["kind"]) for e in ents],
         ATTACK_ENT_SCHEMA,
     )
-    rel_df = spark.createDataFrame(
+    rel_df = _arrow_df(
+        spark,
         [(r["source ID"], r["source type"], r["target ID"], r["target type"])
          for r in rels],
         ATTACK_REL_SCHEMA,
@@ -209,17 +224,11 @@ def dim_capec(spark: SparkSession) -> DataFrame:
         p["Resources_Required"], p["Consequences"], p["Mitigations"],
         p["Example_Instances"], p["Related_Weaknesses"], p["Taxonomy_Mappings"],
     ) for p in D.dict_capec()]
-    return spark.createDataFrame(rows, CAPEC_SCHEMA)
+    return _arrow_df(spark, rows, CAPEC_SCHEMA)
 
 
 def dim_d3fend(spark: SparkSession) -> DataFrame:
     rows = [(d["@id"], d["d3f:d3fend-id"], d["d3f:definition"],
              d["rdfs:label"], d["off_tech_id"])
             for d in D.dict_d3fend()]
-    return spark.createDataFrame(rows, D3FEND_SCHEMA)
-
-
-def dim_alias(spark: SparkSession) -> DataFrame:
-    rows = [(a["surface_form"], a["canonical_id"], a["kind"], a["prior"])
-            for a in D.alias_table()]
-    return spark.createDataFrame(rows, ALIAS_SCHEMA)
+    return _arrow_df(spark, rows, D3FEND_SCHEMA)
