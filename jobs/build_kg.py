@@ -2,28 +2,52 @@
 
   spark-submit --py-files uckg_spark.zip jobs/build_kg.py \
       --pages /data/pages_parquet --out /data/uckg_graph \
-      [--resume-root /data/uckg_stages] [--n-groups 64]
+      [--resume-root /data/uckg_stages]
 
-With --resume-root, the fused extract+mention scan runs through the
-lineage layer (partition-group micro-batches, idempotent re-run — SURVEY.md
-§2.10 I1/I5) and linking replays its durable mention stream, so a killed
-run re-scans only the groups it had not finished; without it, the job
-runs as one straight pipeline.
+With --resume-root, the fused extract+mention scan is committed to the
+``mentions`` table of a catalog at that root (the schema of ``sync_kg``'s
+mention store), pinned to a fingerprint of what the scan read: the pages
+files and the alias dictionary. A re-run whose pin matches the head
+replays the stored scan and runs no scan; any other run rescans and
+commits afresh. The commit is atomic, so a run killed mid-scan leaves an
+orphan dir and no snapshot, and the next run scans everything again.
+Without --resume-root the job runs as one straight pipeline.
 """
 
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
+import os
 import sys
 import time
+from urllib.parse import unquote, urlparse
 
 sys.path.insert(0, ".")
 
 
+def scan_pin(pages_df, alias_rows: list[dict]) -> str | None:
+    """sha256 over the sorted ``(path, size, mtime_ns)`` of every pages
+    input file plus the alias dictionary — the inputs of ``scan_pages``.
+    None when the driver cannot ``os.stat`` an input file (a non-local
+    filesystem, a file gone since listing): no pin, so the scan reruns."""
+    h = hashlib.sha256()
+    for uri in sorted(pages_df.inputFiles()):
+        parsed = urlparse(uri)
+        if parsed.scheme not in ("", "file"):
+            return None
+        try:
+            st = os.stat(unquote(parsed.path))
+        except OSError:
+            return None
+        h.update(f"{uri}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    h.update(json.dumps(alias_rows, sort_keys=True).encode())
+    return h.hexdigest()
+
+
 def run(spark, pages: str, out: str, resume_root: str | None = None,
-        n_groups: int = 64, mention_partitions: int | None = None,
-        dims=None) -> dict:
+        mention_partitions: int | None = None, dims=None) -> dict:
     from uckg_spark.plans.kg_pipeline import (
         KgDims, build_triples, linked_mentions, materialize_graph)
     from uckg_spark.sources.catalog import GraphCatalog
@@ -34,18 +58,27 @@ def run(spark, pages: str, out: str, resume_root: str | None = None,
 
     t0 = time.time()
     if resume_root:
-        from uckg_spark.lineage import run_stage_with_resume
         from uckg_spark.operators.mentions import scan_pages
 
-        # the scan is the corpus-sized cost: it runs under lineage, so a
-        # resumed run scans only the groups with no lineage row yet
-        raw = run_stage_with_resume(
-            spark, pages_df, "mentions",
-            lambda p: scan_pages(spark, p, dims.alias_rows), resume_root,
-            n_groups=n_groups,
-        )
-        m = linked_mentions(spark, None, dims, mention_partitions,
-                            raw_mentions=raw)
+        stages = GraphCatalog(resume_root)
+        pin = scan_pin(pages_df, dims.alias_rows)
+        head = stages.latest_snapshot("mentions")
+        if pin and head and (head.get("props") or {}).get("scan_pin") == pin:
+            snap = head["snapshot_id"]
+        else:
+            # n_tasks = the scan's own partition count: write_table's
+            # coalesce must not narrow the corpus-sized scan
+            snap = stages.write_table(
+                "mentions", scan_pages(spark, pages_df, dims.alias_rows),
+                n_tasks=pages_df.rdd.getNumPartitions(),
+                props={"scan_pin": pin} if pin else None)
+            # the superseded scan is never replayed: drop its dir (and
+            # any crashed scan's orphan past the grace age)
+            stages.expire_snapshots("mentions")
+        m = linked_mentions(
+            spark, None, dims, mention_partitions,
+            raw_mentions=stages.read_table(spark, "mentions",
+                                           snapshot_id=snap))
     else:
         m = linked_mentions(spark, pages_df, dims, mention_partitions,
                             defer_barrier=True)
@@ -73,8 +106,8 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--pages", required=True, help="pages parquet/Iceberg path")
     ap.add_argument("--out", required=True, help="output graph catalog root")
-    ap.add_argument("--resume-root", default=None, help="lineage/stage root")
-    ap.add_argument("--n-groups", type=int, default=64)
+    ap.add_argument("--resume-root", default=None,
+                    help="catalog root holding the pinned mention scan")
     ap.add_argument("--mention-partitions", type=int, default=None)
     args = ap.parse_args()
 
@@ -83,7 +116,6 @@ def main() -> None:
     spark = build_session(app_name="uckg-build-kg")
     print(json.dumps(run(
         spark, args.pages, args.out, resume_root=args.resume_root,
-        n_groups=args.n_groups,
         mention_partitions=args.mention_partitions)))
 
 

@@ -1,19 +1,17 @@
 """jobs/build_kg.run: the built graph equals the oracle with and without
---resume-root, and a resumed build scans only the groups it had not
-finished (I1/I5 crash-resume through the mention-scan stage)."""
+--resume-root; a resumed build replays the pinned mention commit only
+while its input is unchanged, and a failed scan commits nothing (I1/I2
+resume through the mention-scan stage)."""
 
-import json
+import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from jobs import build_kg
-from uckg_spark.lineage import LineageLog
+from uckg_spark.operators import mentions
 from uckg_spark.oracle import kg_oracle
 from uckg_spark.sources.catalog import GraphCatalog
 from uckg_spark.sources.pages import pages_df, write_pages
-
-N_GROUPS = 4
 
 
 def _catalog_graph(spark, root):
@@ -41,36 +39,72 @@ def test_straight_build_equals_oracle(spark, kg_dims, pages_path,
     assert _catalog_graph(spark, out) == oracle_graph
 
 
-def test_resumed_build_scans_only_pending_groups(
-        spark, kg_dims, pages_path, oracle_graph, tmp_path):
+def test_resumed_build_runs_no_scan(spark, kg_dims, pages_path, oracle_graph,
+                                    tmp_path, monkeypatch):
+    """A second run over the same input and root replays the pinned
+    mention commit: the scan never runs, and the graph is unchanged."""
     root = str(tmp_path / "stages")
     build_kg.run(spark, pages_path, str(tmp_path / "g1"), resume_root=root,
-                 n_groups=N_GROUPS, dims=kg_dims)
+                 dims=kg_dims)
     assert _catalog_graph(spark, str(tmp_path / "g1")) == oracle_graph
-    log = LineageLog(root)
-    run1 = log.rows()
-    assert sorted(r["part_group"] for r in run1) == list(range(N_GROUPS))
-    assert len({r["run_id"] for r in run1}) == 1
 
-    # simulate a crash after 2 groups: drop lineage rows for groups 2,3
-    with open(log.path, "w") as f:
-        f.writelines(json.dumps(r) + "\n" for r in run1 if r["part_group"] < 2)
+    def no_scan(*_args):
+        raise AssertionError("resumed run re-scanned its pages")
 
+    monkeypatch.setattr(mentions, "scan_pages", no_scan)
     build_kg.run(spark, pages_path, str(tmp_path / "g2"), resume_root=root,
-                 n_groups=N_GROUPS, dims=kg_dims)
+                 dims=kg_dims)
     assert _catalog_graph(spark, str(tmp_path / "g2")) == oracle_graph
+    assert len(GraphCatalog(root).snapshots("mentions")) == 1
 
-    kept, new = log.rows()[:2], log.rows()[2:]
-    assert kept == [r for r in run1 if r["part_group"] < 2]  # run 1's run_id
-    assert sorted(r["part_group"] for r in new) == [2, 3]
-    assert run1[0]["run_id"] not in {r["run_id"] for r in new}
-    # the resumed scan read exactly the pages hashed to the pending groups
-    pending_pages = (
-        spark.read.parquet(pages_path)
-        .filter(F.pmod(F.xxhash64("url"), F.lit(N_GROUPS)).isin(2, 3))
-        .count())
-    assert 0 < pending_pages < sum(r["row_count_in"] for r in run1)
-    assert sum(r["row_count_in"] for r in new) == pending_pages
+
+def test_new_input_rescans(spark, kg_dims, fixture_pages, oracle_graph,
+                           tmp_path):
+    """Pages B rewritten over pages A's path, same root: the pin no longer
+    matches, so the build scans B and equals oracle(B), not oracle(A)."""
+    pages_b = fixture_pages[:40]
+    oracle_b = kg_oracle.oracle_graph(kg_oracle.run_oracle(pages_b)[1])
+    assert oracle_b != oracle_graph
+    path, root = str(tmp_path / "pages"), str(tmp_path / "stages")
+    write_pages(pages_df(spark, fixture_pages), path)
+    build_kg.run(spark, path, str(tmp_path / "ga"), resume_root=root,
+                 dims=kg_dims)
+    assert _catalog_graph(spark, str(tmp_path / "ga")) == oracle_graph
+
+    write_pages(pages_df(spark, pages_b), path)
+    build_kg.run(spark, path, str(tmp_path / "gb"), resume_root=root,
+                 dims=kg_dims)
+    assert _catalog_graph(spark, str(tmp_path / "gb")) == oracle_b
+    assert len(GraphCatalog(root).snapshots("mentions")) == 2
+    # the superseded scan's data is expired with it
+    assert len(os.listdir(os.path.join(root, "mentions"))) == 1
+
+
+def test_failed_scan_commits_nothing(spark, kg_dims, pages_path, oracle_graph,
+                                     tmp_path, monkeypatch):
+    """A scan whose tasks fail after emitting their rows commits no
+    ``mentions`` snapshot; the next run scans and equals the oracle."""
+    real_scan = mentions.scan_pages
+
+    def failing_scan(spark, pages, alias_rows):
+        def fail_late(batches):
+            yield from batches
+            raise RuntimeError("executor lost mid-scan")
+
+        return real_scan(spark, pages, alias_rows).mapInPandas(
+            fail_late, schema=mentions.MENTION_SCHEMA)
+
+    root = str(tmp_path / "stages")
+    monkeypatch.setattr(mentions, "scan_pages", failing_scan)
+    with pytest.raises(Exception, match="executor lost mid-scan"):
+        build_kg.run(spark, pages_path, str(tmp_path / "g1"),
+                     resume_root=root, dims=kg_dims)
+    assert GraphCatalog(root).latest_snapshot("mentions") is None
+
+    monkeypatch.undo()
+    build_kg.run(spark, pages_path, str(tmp_path / "g2"), resume_root=root,
+                 dims=kg_dims)
+    assert _catalog_graph(spark, str(tmp_path / "g2")) == oracle_graph
 
 
 def test_emission_runs_once_per_build(spark, kg_dims, fixture_pages,

@@ -1,7 +1,5 @@
-"""Graph catalog (partitioned writes + manifest) and the A5/I3 count-delta
-trigger."""
+"""Graph catalog (partitioned writes + manifest)."""
 
-from uckg_spark.lineage import LineageLog, needs_sync
 from uckg_spark.sources.catalog import GraphCatalog
 
 
@@ -79,27 +77,3 @@ def test_hot_pred_spreads_over_writers(spark, tmp_path):
         tmp_path / f"skewgraph/edges/snap-{snap}/pred=ucohasCVE_ID/*.parquet"))
     assert len(files) > 1, files
     assert cat.latest_snapshot("edges")["rows"] == 20000
-
-
-def test_needs_sync(tmp_path):
-    log = LineageLog(str(tmp_path))
-    log.append({"run_id": "r", "stage": "extract", "part_group": 0,
-                "input_snapshot_id": "s", "row_count_in": 100,
-                "row_count_out": 100, "content_sha256": "x" * 64,
-                "wall_ms": 1, "ts": 0.0})
-    assert not needs_sync(log, "extract", 100)
-    assert needs_sync(log, "extract", 150)  # source moved ahead → re-run
-    assert needs_sync(log, "other_stage", 1)
-    # a snapshot-advance re-run APPENDS a second row for the same group;
-    # only the latest row may count (summing both would claim 100+120=220
-    # ingested and miss a real delta at 150 < 220)
-    log.append({"run_id": "r2", "stage": "extract", "part_group": 0,
-                "input_snapshot_id": "s2", "row_count_in": 120,
-                "row_count_out": 120, "content_sha256": "y" * 64,
-                "wall_ms": 1, "ts": 1.0})
-    assert not needs_sync(log, "extract", 120)
-    assert needs_sync(log, "extract", 150)
-    # snapshot-pinned: the group's latest row is from s2, so under s2 the
-    # trigger sees 120 ingested; under a NEWER snapshot s3 nothing counts
-    assert not needs_sync(log, "extract", 120, input_snapshot_id="s2")
-    assert needs_sync(log, "extract", 1, input_snapshot_id="s3")

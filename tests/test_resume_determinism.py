@@ -1,135 +1,45 @@
-"""I1/I2 resume semantics + the §5.5 determinism guarantee."""
+"""I1/I2 resume pin + the §5.5 determinism guarantee."""
 
 import os
 
-from pyspark.sql import functions as F
-
-from uckg_spark.lineage import LineageLog, run_stage_with_resume
-from uckg_spark.operators.extract import extract_pages
-from uckg_spark.sources.pages import pages_df
+from jobs.build_kg import scan_pin
+from uckg_spark.sources.pages import pages_df, read_pages, write_pages
 
 
 class TestResume:
-    def test_resume_skips_completed_groups(self, spark, fixture_pages, tmp_path):
-        root = str(tmp_path / "stages")
-        pdf = pages_df(spark, fixture_pages)
+    def test_pin_follows_the_input_files(self, spark, fixture_pages,
+                                         tmp_path):
+        """The scan pin is stable while the pages files and the alias
+        dictionary are, and moves when either changes."""
+        path = str(tmp_path / "pages")
+        write_pages(pages_df(spark, fixture_pages), path)
+        aliases = [{"surface_form": "x", "canonical_id": "a:x",
+                    "kind": "vendor_product", "prior": 1.0}]
+        pin = scan_pin(read_pages(spark, path), aliases)
+        assert pin == scan_pin(read_pages(spark, path), aliases)
+        assert pin != scan_pin(read_pages(spark, path),
+                               [{**aliases[0], "prior": 0.5}])
+        part = next(f for f in os.listdir(path) if f.endswith(".parquet"))
+        st = os.stat(os.path.join(path, part))
+        os.utime(os.path.join(path, part),
+                 ns=(st.st_atime_ns, st.st_mtime_ns + 1))
+        assert pin != scan_pin(read_pages(spark, path), aliases)
 
-        # each run stamps its output with a marker column, so "which run
-        # produced this row" is directly observable in the durable output —
-        # the single-pass rewrite runs transform once per run, so a
-        # call-count assertion can no longer distinguish skip from re-run
-        def stage_marked(marker):
-            def stage(part):
-                return extract_pages(part).withColumn("run_marker", F.lit(marker))
-            return stage
+    def test_unstatable_input_has_no_pin(self, tmp_path):
+        """Fail closed: an input file the driver cannot stat yields no
+        pin, so the build always rescans."""
+        class Listing:
+            def __init__(self, files):
+                self.files = files
 
-        out1 = run_stage_with_resume(
-            spark, pdf, "extract", stage_marked("A"), root, n_groups=4)
-        # materialize NOW: the resume re-run below overwrites group dirs,
-        # invalidating out1's lazy file listing
-        rows1 = {(r["url"], r["text_sha256"]) for r in out1.collect()}
-        n1 = len(rows1)
-        log = LineageLog(root)
-        assert log.completed_groups("extract") == {0, 1, 2, 3}
+            def inputFiles(self):
+                return self.files
 
-        # simulate a crash after 2 groups: drop lineage rows for groups 2,3
-        rows = [r for r in log.rows() if r["part_group"] < 2]
-        with open(log.path, "w") as f:
-            import json
-
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-
-        out2 = run_stage_with_resume(
-            spark, pdf, "extract", stage_marked("B"), root, n_groups=4)
-        marked = out2.withColumn(
-            "pg", F.pmod(F.xxhash64("url"), F.lit(4)).cast("int")).collect()
-        # completed groups kept run-1 output; only the missing groups re-ran
-        assert {r["run_marker"] for r in marked if r["pg"] < 2} == {"A"}
-        assert {r["run_marker"] for r in marked if r["pg"] >= 2} == {"B"}
-        rows2 = {(r["url"], r["text_sha256"]) for r in marked}
-        assert len(rows2) == n1  # no duplicates, no losses
-        assert rows2 == rows1  # texts identical across the resume boundary
-
-    def test_snapshot_advance_invalidates_stale_groups(
-        self, spark, fixture_pages, tmp_path
-    ):
-        """I3 delta semantics: when the input table advances to a new
-        snapshot, previously-completed groups are STALE and must re-run —
-        resume must never serve output computed from a superseded input
-        (the reference re-ingests the NVD delta on its daily DAG,
-        /root/reference/airflow/dags/ingestion_dag.py:53-77). The re-run
-        result must equal a from-scratch run on the new input."""
-        from uckg_spark.fixtures.pages import generate_pages
-
-        root = str(tmp_path / "stages_snap")
-        p1 = pages_df(spark, fixture_pages)
-
-        def stage_marked(marker):
-            def stage(part):
-                return extract_pages(part).withColumn("run_marker", F.lit(marker))
-            return stage
-
-        run_stage_with_resume(
-            spark, p1, "extract", stage_marked("A"), root, n_groups=4,
-            input_snapshot_id="snap-1")
-
-        # same snapshot, re-run: every group skipped (crash-resume path)
-        out_same = run_stage_with_resume(
-            spark, p1, "extract", stage_marked("X"), root, n_groups=4,
-            input_snapshot_id="snap-1")
-        assert {r["run_marker"] for r in out_same.collect()} == {"A"}
-
-        # input advances: 20 extra pages under a NEW snapshot id — every
-        # group's input may have changed, so all stale groups re-run
-        p2 = pages_df(spark, generate_pages(100))
-        out_new = run_stage_with_resume(
-            spark, p2, "extract", stage_marked("B"), root, n_groups=4,
-            input_snapshot_id="snap-2")
-        got = out_new.collect()
-        assert {r["run_marker"] for r in got} == {"B"}  # nothing stale kept
-        # equals a from-scratch run on the new input
-        scratch = run_stage_with_resume(
-            spark, p2, "extract", stage_marked("B"),
-            str(tmp_path / "scratch"), n_groups=4, input_snapshot_id="snap-2")
-        assert ({(r["url"], r["text_sha256"]) for r in got}
-                == {(r["url"], r["text_sha256"]) for r in scratch.collect()})
-        # lineage latest-wins: all groups now pinned to snap-2
-        log = LineageLog(root)
-        assert log.completed_groups("extract", "snap-2") == {0, 1, 2, 3}
-        assert log.completed_groups("extract", "snap-1") == set()
-
-    def test_lineage_rows_complete(self, spark, fixture_pages, tmp_path):
-        root = str(tmp_path / "stages2")
-        pdf = pages_df(spark, fixture_pages)
-        run_stage_with_resume(spark, pdf, "extract", extract_pages, root, n_groups=2)
-        rows = LineageLog(root).rows()
-        assert len(rows) == 2
-        for r in rows:
-            assert r["row_count_in"] > 0 and r["row_count_out"] > 0
-            assert len(r["content_sha256"]) == 64
-            assert r["wall_ms"] >= 0
-        # A7-style consistency: the partition-group set must be exactly
-        # the expected increments (cpe_collection.py:117-134 analog)
-        assert sorted(r["part_group"] for r in rows) == [0, 1]
-
-    def test_single_pass_job_count(self, spark, fixture_pages, tmp_path):
-        """The stage must launch a CONSTANT number of Spark jobs, not
-        O(n_groups): the round-1 per-group loop ran count+write+hash per
-        group (~3×n_groups jobs ⇒ ~n_groups rescans of a 100 TB input)."""
-        root = str(tmp_path / "stages3")
-        pdf = pages_df(spark, fixture_pages)
-        sc = spark.sparkContext
-        sc.setJobGroup("lineage-single-pass", "job-count probe")
-        try:
-            run_stage_with_resume(
-                spark, pdf, "extract", extract_pages, root, n_groups=16)
-        finally:
-            sc.setJobGroup(None, None)
-        n_jobs = len(sc.statusTracker().getJobIdsForGroup("lineage-single-pass"))
-        # write + stats read-back + final reader listing — a few jobs,
-        # regardless of group count (old impl: ≥ 3 × 16 here)
-        assert 0 < n_jobs <= 6, n_jobs
+        assert scan_pin(Listing(["hdfs://nn/pages/part-0.parquet"]), []) is None
+        gone = (tmp_path / "part-0.parquet").as_uri()
+        assert scan_pin(Listing([gone]), []) is None
+        (tmp_path / "part-0.parquet").write_bytes(b"x")
+        assert scan_pin(Listing([gone]), []) is not None
 
 
 class TestDeterminism:

@@ -106,56 +106,6 @@ def test_first_seen_keys_multi_batch(spark, tmp_path):
     assert got == list(range(37))  # exactly once per key, all keys
 
 
-def test_incremental_kg_stream_converges_to_batch(
-        spark, fixture_pages, kg_dims, tmp_path):
-    """Streamed page batches through the delta sink produce EXACTLY the
-    batch pipeline's triple set in the catalog, across two waves and a
-    same-checkpoint replay (effectively-once via diff-before-append)."""
-    from uckg_spark.plans.kg_pipeline import build_triples
-    from uckg_spark.sources.catalog import GraphCatalog
-    from uckg_spark.streaming.pages_stream import run_incremental_kg
-
-    in_path = str(tmp_path / "kg_in")
-    cat_root = str(tmp_path / "kg_cat")
-    ckpt = str(tmp_path / "kg_ckpt")
-    wave1 = pages_df(spark, fixture_pages[:50])
-    wave2 = pages_df(spark, fixture_pages[50:])
-    wave1.repartition(4).write.mode("overwrite").parquet(in_path)
-
-    run_incremental_kg(spark, in_path, cat_root, ckpt,
-                       dims=kg_dims, max_files=2)
-    cat = GraphCatalog(cat_root)
-
-    def read_cat():
-        # pred is the partition column, so it comes back LAST on read;
-        # re-select to the canonical (subj, pred, obj) order
-        return {tuple(r) for r in
-                cat.read_edges(spark).select("subj", "pred", "obj").collect()}
-
-    got1 = read_cat()
-    want1 = {tuple(r) for r in
-             build_triples(spark, wave1, kg_dims)
-             .select("subj", "pred", "obj").collect()}
-    assert got1 == want1
-
-    # second wave arrives as new files; only its delta is appended
-    wave2.repartition(4).write.mode("append").parquet(in_path)
-    run_incremental_kg(spark, in_path, cat_root, ckpt,
-                       dims=kg_dims, max_files=2)
-    got2 = read_cat()
-    want_all = {tuple(r) for r in
-                build_triples(spark, pages_df(spark, fixture_pages), kg_dims)
-                .select("subj", "pred", "obj").collect()}
-    assert got2 == want_all
-
-    # replay with the same checkpoint: nothing new, no extra snapshots
-    n_snaps = len(cat.snapshots("edges"))
-    run_incremental_kg(spark, in_path, cat_root, ckpt,
-                       dims=kg_dims, max_files=2)
-    assert read_cat() == want_all
-    assert len(cat.snapshots("edges")) == n_snaps
-
-
 def test_session_windows_merge_across_batches(spark, tmp_path):
     """session_window state-store merging: a session whose events are
     split across micro-batches (one file each, maxFilesPerTrigger=1)

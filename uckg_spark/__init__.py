@@ -11,8 +11,8 @@ kernel/     pure-Python shared kernels (HTML extraction, id gazetteers,
 fixtures/   deterministic (seed=42) synthetic pages + dictionary tables
             per FIXTURES.md.
 oracle/     pure-Python golden pipeline → golden triples / golden text.
-sources/    catalog shim (parquet + manifest standing in for Iceberg),
-            lineage/resume layer.
+sources/    catalog shim (parquet + manifest standing in for Iceberg:
+            atomic snapshot commits, props, time travel, changelogs).
 operators/  Spark operators: extraction, mention detection, entity linking,
             canonicalization (salted agg + connected components), dedup
             (exact/minhash/simhash/jaccard), similarity search, text stats,

@@ -93,16 +93,6 @@ def cwe_prefix(raw_id: str) -> str:
     return ("CWE-" + str(raw_id)).strip()
 
 
-def capec_prefix(raw_id: str) -> str:
-    """``"CAPEC-" + id`` (/root/reference/parse.py:315)."""
-    return "CAPEC-" + str(raw_id)
-
-
-def technique_prefix(entry_id: str) -> str:
-    """``"T" + entry_id`` (/root/reference/parse.py:428)."""
-    return "T" + str(entry_id)
-
-
 # ---------------------------------------------------------------------------
 # Aho–Corasick automaton for dictionary surface forms (vendor/product
 # strings, ATT&CK technique names). Pure Python, built once on the driver,

@@ -6,10 +6,10 @@ sides. The scalable check is a COMMUTATIVE fingerprint: hash each row
 canonically, SUM the hashes — addition is order- and
 partitioning-independent, so two engines agree iff the multisets of
 rows agree (modulo adversarial collisions, which an integrity check —
-unlike a security boundary — does not defend against). The repo's
-lineage already uses this trick for stage idempotency
-(lineage.py row-hash sums, SURVEY §2 I2); this operator surfaces it as
-a first-class per-partition-group audit.
+unlike a security boundary — does not defend against). The KG build's
+resume pins its input by file metadata only (``jobs/build_kg.scan_pin``:
+path, size, mtime — SURVEY §2 I2); this operator checks the content
+itself, as a first-class per-partition-group audit.
 
 Canonical row form: values cast to string, NULL → a sentinel that
 cannot collide with data ('\\x00'), joined with the unit separator

@@ -449,10 +449,11 @@ def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     every row of ``old`` not in ``new`` tagged ``removed`` (set
     semantics, like the A1-deduped triple tables the catalog stores).
 
-    This is what an incremental pipeline applies instead of rebuilding:
-    ``build_triples(new_batch)`` → ``snapshot_diff(catalog_head, t)`` →
-    append only the ``added`` rows (the reference's n10s MERGE semantics
-    make re-inserts no-ops; the diff makes them free instead).
+    This is the delta an incremental sync applies instead of rebuilding
+    (``plans/incremental.sync_kg`` computes the same two sides as
+    left-anti joins against the edge head: ``added`` rows append,
+    ``removed`` rows retract). The reference's n10s MERGE semantics make
+    re-inserts no-ops; the diff makes them free instead.
 
     Scale shape: each direction is one EXCEPT — a shuffle keyed on the
     full row, which IS the join key, with map-side partial dedup. On the

@@ -1,1 +1,1 @@
-"""Sources: pages table IO, dimension tables, catalog/lineage shim."""
+"""Sources: pages table IO, dimension tables, snapshot catalog shim."""

@@ -78,10 +78,8 @@ class CommitConflictError(RuntimeError):
 # MoR merges at or below this many update rows derive their keys-only
 # delete file driver-side (pyarrow read of the just-written footprint's
 # key columns) instead of through a second Spark job — the same
-# small-side budget class as a broadcast build. Env-tunable so a
-# cluster deployment can raise/lower it.
-_MOR_DRIVER_DELETE_MAX_ROWS = int(
-    os.environ.get("UCKG_MOR_DRIVER_DELETE_ROWS", "1000000"))
+# small-side budget class as a broadcast build.
+_MOR_DRIVER_DELETE_MAX_ROWS = 1_000_000
 
 
 # ---- snapshot-row accessors tolerant of pre-MoR commit rows ------------

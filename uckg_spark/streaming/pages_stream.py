@@ -273,80 +273,21 @@ def run_incremental_counts(
     checkpoint: str,
     table: str = "counts",
 ) -> None:
-    """Exactly-once incremental AGGREGATE maintenance — the materialized
-    count-view twin of ``run_incremental_kg``. Set-delta maintenance is
-    naturally idempotent (a replayed subtract computes an empty delta);
-    aggregate maintenance is NOT (a replayed merge double-counts), so
-    exactly-once needs a transactional marker: every snapshot commit
-    records the producing ``batch_id`` in its props (Iceberg snapshot-
-    summary style), and a replayed foreachBatch — which can only be the
-    LAST uncommitted batch, checkpointed batch ids are monotone — sees
-    its own id on the head and skips. Concurrent writers fail the
+    """Exactly-once incremental AGGREGATE maintenance (a materialized
+    count view). Set-delta maintenance is naturally idempotent (a
+    replayed subtract computes an empty delta, as in
+    ``dedup_ingest_sink``); aggregate maintenance is NOT (a replayed
+    merge double-counts), so exactly-once needs a transactional marker:
+    every snapshot commit records the producing ``batch_id`` in its
+    props (Iceberg snapshot-summary style), and a replayed foreachBatch
+    — which can only be the LAST uncommitted batch, checkpointed batch
+    ids are monotone — sees its own id on the head and skips. Concurrent writers fail the
     catalog's OCC CAS instead of merging twice."""
     from ..sources.catalog import GraphCatalog
 
     q = (
         stream.writeStream.foreachBatch(
             counts_sink(spark, GraphCatalog(catalog_root), key_col, table))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def run_incremental_kg(
-    spark: SparkSession,
-    in_path: str,
-    catalog_root: str,
-    checkpoint: str,
-    dims=None,
-    max_files: int = 4,
-) -> None:
-    """The incremental-maintenance loop end-to-end: stream page batches →
-    build each batch's triples → append ONLY the edge delta to the
-    snapshot catalog (``foreachBatch`` + the `plans.graphalgs`
-    ``snapshot_diff`` semantics).
-
-    Effectively-once without a transactional sink: ``foreachBatch`` is
-    at-least-once (a crash between the catalog commit and the checkpoint
-    advance replays the batch), but because every append is the SUBTRACT
-    of the batch triples against the committed head, a replayed batch
-    computes an empty delta and commits nothing — the catalog converges
-    to the batch-built triple set regardless of replays. Concurrent
-    writers are handled by the catalog's OCC CAS, and compaction
-    (``compact_edges``) keeps read amplification flat as deltas pile up.
-    """
-    from ..plans.kg_pipeline import KgDims, build_triples
-
-    if dims is None:
-        dims = KgDims(spark)
-    from ..sources.catalog import GraphCatalog
-
-    cat = GraphCatalog(catalog_root)
-
-    def sink(batch_df, _batch_id: int) -> None:
-        triples = build_triples(spark, batch_df, dims).select(
-            "subj", "pred", "obj")
-        try:
-            # pred is the catalog's partition column and surfaces LAST on
-            # read; re-select so the positional subtract lines up
-            head = cat.read_edges(spark).select("subj", "pred", "obj")
-        except FileNotFoundError:
-            cat.write_edges(triples, mode="overwrite")
-            return
-        # the "added" half of snapshot_diff(head, head ∪ triples):
-        # removed is empty by construction, so compute only this side
-        delta = triples.subtract(head).persist()
-        try:
-            if delta.count() > 0:  # empty delta (e.g. a replay): no commit
-                cat.write_edges(delta, mode="append")
-        finally:
-            delta.unpersist()
-
-    q = (
-        read_pages_stream(spark, in_path, max_files=max_files)
-        .writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
@@ -386,7 +327,7 @@ def dedup_ingest_sink(spark, cat, num_hashes: int = 4, bands: int = 2,
        corpus touched only through the index);
     2. append the NEW pairs to ``pairs_table`` as a set-delta
        (subtract-then-append: a replayed batch computes an empty delta,
-       the ``run_incremental_kg`` idempotence argument);
+       so the append is idempotent);
     3. extend the index with the batch's banded signatures, committed
        with the producing batch_id in the snapshot props — the
        transactional marker (``counts_sink`` argument) that makes the
