@@ -10,7 +10,6 @@ def spark():
         master="local[4]",
         shuffle_partitions=4,
         extra_conf={
-            "spark.ui.showConsoleProgress": "false",
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "4",
         },
     )

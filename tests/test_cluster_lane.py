@@ -45,10 +45,11 @@ def _run_lane() -> dict:
     from uckg_spark.session import build_session, reuse
     from uckg_spark.sources.pages import pages_df
 
-    spark = build_session(app_name="uckg-cluster-lane", master=MASTER,
-                          extra_conf={"spark.ui.showConsoleProgress": "false"})
+    spark = build_session(app_name="uckg-cluster-lane", master=MASTER)
     spark.sparkContext.setLogLevel("ERROR")
     out: dict = {"master": spark.sparkContext.master,
+                 "console_progress":
+                     spark.conf.get("spark.ui.showConsoleProgress"),
                  "shuffle_partitions":
                      spark.conf.get("spark.sql.shuffle.partitions"),
                  "reuse_cached": reuse(spark.range(3)).is_cached,
@@ -107,6 +108,8 @@ def test_local_cluster_lane():
     assert proc.returncode == 0 and lines, proc.stderr[-4000:]
     res = json.loads(lines[-1])
     assert res["master"] == MASTER
+    # build_session itself turns the stderr progress bars off
+    assert res["console_progress"] == "false", res
     assert res["shuffle_partitions"] == "8"  # 2 workers × 1 core → 2·2, floor 8
     # the lane ran the cluster half: reuse persisted instead of checkpointing
     assert res["reuse_cached"], res

@@ -1,9 +1,11 @@
 """Guard: deployment settings are read in ``uckg_spark/session.py`` only.
 
-A module under ``uckg_spark/`` or ``jobs/`` that reads ``os.environ`` or
+A module under ``uckg_spark/``, ``jobs/`` or ``tools/``, or the driver
+contract ``__spark_entry__.py``, that reads ``os.environ`` or
 ``os.getenv`` grows a tuning knob no caller sees. Settings a deployment
 must choose (master, driver memory) live in ``session.py``; everything
-else is a constant or a parameter.
+else is a constant or a parameter. ``bench.py`` is frozen and out of
+scope.
 """
 
 import ast
@@ -29,9 +31,11 @@ def _env_reads(path: str) -> list[int]:
 
 
 def test_only_session_reads_the_environment():
-    paths = (glob.glob(f"{REPO}/uckg_spark/**/*.py", recursive=True)
-             + glob.glob(f"{REPO}/jobs/**/*.py", recursive=True))
+    paths = ([f"{REPO}/__spark_entry__.py"]
+             + [p for d in ("uckg_spark", "jobs", "tools")
+                for p in glob.glob(f"{REPO}/{d}/**/*.py", recursive=True)])
     assert any(p.endswith("session.py") for p in paths)
+    assert any(p.endswith("scaling_bench.py") for p in paths)
     found = [f"{rel}:{line}" for p in sorted(paths)
              if (rel := os.path.relpath(p, REPO)) not in ALLOWED
              for line in _env_reads(p)]

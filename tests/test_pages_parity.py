@@ -4,7 +4,7 @@
    fixtures — the assertion is equality, strictly stronger).
 """
 
-from uckg_spark.operators.extract import extract_pages
+from uckg_spark.operators.mentions import extract_pages
 from uckg_spark.oracle.kg_oracle import run_oracle
 from uckg_spark.plans.kg_pipeline import build_triples, materialize_graph
 from uckg_spark.sources.pages import pages_df

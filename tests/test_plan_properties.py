@@ -8,7 +8,7 @@ SURVEY.md §4 relies on for the 10^12-document design point).
 import pytest
 
 import __spark_entry__ as E
-from uckg_spark.operators.extract import extract_pages
+from uckg_spark.operators.mentions import extract_pages
 from uckg_spark.plans.kg_pipeline import linked_mentions
 from uckg_spark.sources.pages import read_pages, pages_df, write_pages
 

@@ -2,8 +2,7 @@
 mention set; windowed watermark aggregate sanity."""
 
 from uckg_spark.fixtures import dicts as D
-from uckg_spark.operators.extract import extract_pages
-from uckg_spark.operators.mentions import detect_mentions
+from uckg_spark.operators.mentions import scan_pages
 from uckg_spark.sources.pages import pages_df, write_pages
 from uckg_spark.streaming.pages_stream import run_stream_once
 
@@ -22,7 +21,7 @@ def test_stream_equals_batch(spark, fixture_pages, tmp_path):
         .select("url", "kind", "token", "canonical_id").collect()
     }
     batch_rows = {
-        tuple(r) for r in detect_mentions(spark, extract_pages(pdf), alias_rows)
+        tuple(r) for r in scan_pages(spark, pdf, alias_rows)
         .select("url", "kind", "token", "canonical_id").collect()
     }
     assert stream_rows == batch_rows

@@ -244,3 +244,11 @@ def test_parse_mp4_multitrack_fields_from_one_track():
     meta = parse_mp4(ftyp + moov)
     assert meta["n_frames"] == 48
     assert (meta["width"], meta["height"]) == (640, 360)
+    # the max-frames track has no dimensions: its own zeros, not the
+    # width/height of the earlier track
+    meta = parse_mp4(ftyp + box(b"moov", trak(640, 360, 12) + trak(0, 0, 48)))
+    assert (meta["n_frames"], meta["width"], meta["height"]) == (48, 0, 0)
+    # no track has frames: the first video track with dimensions
+    meta = parse_mp4(ftyp + box(b"moov", trak(0, 0, 0) + trak(320, 180, 0)
+                                + trak(640, 360, 0)))
+    assert (meta["n_frames"], meta["width"], meta["height"]) == (0, 320, 180)

@@ -12,9 +12,10 @@ file instead of only a terminal scroll)
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -43,7 +44,6 @@ def main(sf_dir: str, only: list[str] | None = None,
     from uckg_spark.session import build_session
 
     spark = build_session(master="local[8]", shuffle_partitions=8, extra_conf={
-        "spark.ui.showConsoleProgress": "false",
         "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "8",
     })
     spark.sparkContext.setLogLevel("ERROR")

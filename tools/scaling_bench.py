@@ -1,174 +1,193 @@
-"""Scaling evidence: the same KG-construction job at N and 4N cores.
+"""N -> 4N scaling of the KG build, one executor JVM per core.
 
-Sandbox proxy for the north_rule's two-cluster-size criterion (no real
-cluster here). IMPORTANT hardware caveat, measured (see BENCH.md): this
-container exposes 32 logical CPUs = 16 physical cores × SMT; a pure
-CPU-burn scales only ~21× from 1→32 workers, so an 8→32 comparison is
-capped at ~0.65 "efficiency" by the silicon, not the software. The honest
-N→4N strong-scaling pair inside the physical-core budget is therefore
-local[2] vs local[8] (default); the 8→32 pair is also reported for
-completeness.
+Times perfbench's ``build_large_pages`` op body (``perfbench.kg.build_op``:
+read pages -> ``build_triples`` -> ``materialize_graph`` -> edge and node
+writes into a fresh catalog) on ``local-cluster[1,1,M]`` and on
+``local-cluster[4,1,M]``: one and four executor JVMs of one core each, so
+no two executors share a heap, a GC or a Python worker. Every rep is one
+cold op in its own process (session start, executor registration and
+``KgDims`` are reported apart as ``start_s``), reps alternate N, 4N, N,
+4N, ... so both sides sample the same host noise, and every rep's graph
+is checked against the oracle digest of the same seeded pages. The
+result, every rep included, is written to ``SCALING.json`` at the root of
+the checkout.
 
-The corpus (~10 KB/page, Common-Crawl-realistic) is synthesized on
-executors ONCE and written to parquet; every timed rep reads it from disk —
-the exact shape of a production run reading the Iceberg pages table — and
-caches are cleared between reps so heap state cannot drift across
-measurements. Best-of-reps is reported (single-JVM local mode has
-multi-second GC/JIT variance; the min is the steady-state capability).
+  python tools/scaling_bench.py
 
-Usage:
-  python tools/scaling_bench.py                 # orchestrate (2 vs 8)
-  UCKG_SCALE_CORES="8,32" python tools/scaling_bench.py
-  python tools/scaling_bench.py --worker 8      # one timed run (internal)
+``--worker`` is the entry of the per-rep and corpus subprocesses.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
+import statistics
 import subprocess
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-N_PAGES = int(os.environ.get("UCKG_SCALE_PAGES", "360000"))
-FILLER_PARAS = int(os.environ.get("UCKG_SCALE_FILLER", "50"))
-REPS = int(os.environ.get("UCKG_SCALE_REPS", "2"))
-CORES = tuple(int(c) for c in os.environ.get("UCKG_SCALE_CORES", "2,8").split(","))
-# corpus file count must be sized for the LARGEST core count measured:
-# with too-few large files the high-core run gets coarse waves + straggler
-# tails while the low-core run is unaffected — measured as 171 s vs 119 s
-# for the same 720k pages at local[8] with 32 vs 128 files. 16 tasks/core
-# at the top size keeps wave-tail noise ≪ wall at every measured size.
-PARTS = int(os.environ.get(
-    "UCKG_SCALE_PARTS", str(max(128, 16 * max(CORES)))))
-CORPUS = os.environ.get(
-    "UCKG_SCALE_CORPUS", f"/tmp/uckg_scale_corpus_{N_PAGES}_p{PARTS}")
+SEED = 31
+N_PAGES = 3000  # perfbench's ~260 KB pages: the scan is the largest layer
+CORPUS_FILES = 8  # the scan plans them as 2 tasks on N, 4 on 4N
+WORKER_MB = 1024
+EXECUTORS = (1, 4)
+REPS = 3  # per side
 
 
-def _ensure_corpus(spark) -> None:
-    from uckg_spark.fixtures.pages import synthesize_pages_df
-
-    marker = os.path.join(CORPUS, "_SUCCESS")
-    if os.path.exists(marker):
-        return
-    synthesize_pages_df(
-        spark, N_PAGES, filler_paras=FILLER_PARAS,
-        partitions=PARTS,
-    ).write.mode("overwrite").parquet(CORPUS)
+def _master(executors: int) -> str:
+    return f"local-cluster[{executors},1,{WORKER_MB}]"
 
 
-def worker(cores: int) -> None:
-    from uckg_spark.plans.kg_pipeline import KgDims, build_triples
+def _session(master: str):
     from uckg_spark.session import build_session
-    from uckg_spark.sources.pages import read_pages
 
     spark = build_session(
-        app_name=f"uckg-scaling-{cores}",
-        master=f"local[{cores}]",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
+        app_name="uckg-scaling", master=master,
+        extra_conf={"spark.executorEnv.PYTHONPATH": REPO})
     spark.sparkContext.setLogLevel("ERROR")
-    _ensure_corpus(spark)
-    dims = KgDims(spark)
-    # warm-up: compile plans + JIT on a slice
-    build_triples(
-        spark, read_pages(spark, CORPUS).limit(2000), dims,
-        mention_partitions=cores,
-    ).count()
-    walls, n_triples, n_docs = [], 0, 0
-    for _ in range(REPS):
-        spark.catalog.clearCache()
-        pages = read_pages(spark, CORPUS)
-        t0 = time.time()
-        n_triples = build_triples(
-            spark, pages, dims, mention_partitions=cores
-        ).count()
-        walls.append(time.time() - t0)
-    n_docs = read_pages(spark, CORPUS).count()
-    wall = min(walls)
-    print(json.dumps({
-        "cores": cores, "docs": n_docs, "triples": n_triples,
-        "wall_s": round(wall, 2),
-        "wall_s_reps": [round(w, 2) for w in walls],
-        "docs_per_sec": round(n_docs / wall, 1),
-        "triples_per_sec": round(n_triples / wall, 1),
-    }))
+    return spark
 
 
-def _run_worker(cores: int, reps: int) -> dict:
-    env = dict(os.environ, UCKG_SCALE_REPS=str(reps))
-    out = subprocess.run(
-        [sys.executable, __file__, "--worker", str(cores)],
-        capture_output=True, text=True, check=True, cwd="/root/repo",
-        env=env,
-    )
-    line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
-    return json.loads(line)
+def _wait_for_executors(spark, n: int, timeout_s: float = 120.0) -> None:
+    """Block until ``n`` executors have registered (the driver's block
+    manager is the extra entry), so the op never starts on fewer."""
+    status = spark.sparkContext._jsc.sc().getExecutorMemoryStatus
+    deadline = time.monotonic() + timeout_s
+    while status().size() < n + 1:
+        if time.monotonic() > deadline:
+            raise RuntimeError(f"{n} executors did not register")
+        time.sleep(0.1)
 
 
-def orchestrate() -> None:
-    lo, hi = CORES
-    results = {}
-    if os.environ.get("UCKG_SCALE_INTERLEAVE"):
-        # Shared-host defense: the N and 4N points must sample the SAME
-        # ambient-noise window or the ratio measures the host, not the
-        # software (measured: identical code gave local[2]=990.7 s in one
-        # window and 694.9 s in another — 1.4x — while local[8] moved only
-        # 5%). Interleave single-rep invocations lo,hi,lo,hi,... so every
-        # lo rep has a hi rep adjacent in time, then best-of per side.
-        # Each invocation re-pays JVM startup + warm-up (excluded from
-        # the timed wall as always).
-        acc: dict[int, list[dict]] = {lo: [], hi: []}
-        for _ in range(REPS):
-            for cores in (lo, hi):
-                acc[cores].append(_run_worker(cores, reps=1))
-        for cores in (lo, hi):
-            runs = acc[cores]
-            walls = [r["wall_s"] for r in runs]
-            best = min(range(len(runs)), key=lambda i: walls[i])
-            results[cores] = dict(runs[best], wall_s_reps=walls)
-            results[cores]["docs_per_sec"] = round(
-                runs[best]["docs"] / walls[best], 1)
-            results[cores]["triples_per_sec"] = round(
-                runs[best]["triples"] / walls[best], 1)
-    else:
-        for cores in (lo, hi):
-            results[cores] = _run_worker(cores, REPS)
-    t_lo, t_hi = results[lo]["docs_per_sec"], results[hi]["docs_per_sec"]
-    ratio = hi // lo
-    eff = t_hi / (ratio * t_lo)
-    summary = {
-        "n_pages": N_PAGES,
-        "page_html_bytes_avg": 10931,
-        "corpus_files": PARTS,
-        "cores_pair": [lo, hi],
-        "protocol": (
-            "same job (pages->triples, plans/kg_pipeline.py), same on-disk "
-            "parquet corpus, warm-up run excluded, caches cleared between "
-            "reps, best-of-reps; N->4N strong-scaling proxy chosen inside "
-            "the 16-physical-core budget (32 logical CPUs are 16 cores x "
-            "SMT: a pure CPU-burn scales only ~21x from 1->32 procs, "
-            "capping any 8->32 comparison near 0.65 by hardware)"
-            + (
-                "; INTERLEAVED single-rep invocations lo,hi,lo,hi so both "
-                "core counts sample the same shared-host noise window"
-                if os.environ.get("UCKG_SCALE_INTERLEAVE") else ""
-            )
-        ),
-        f"local{lo}": results[lo],
-        f"local{hi}": results[hi],
-        f"speedup_{lo}_to_{hi}": round(t_hi / t_lo, 3),
+def _worker_corpus(pages: str) -> dict:
+    from pyspark.sql import functions as F
+
+    from perfbench.kg import FILLER_PARAS
+    from perfbench.run import _stop_spark
+    from uckg_spark.fixtures.pages import synthesize_pages_df
+    from uckg_spark.sources.pages import read_pages, write_pages
+
+    spark = _session(_master(max(EXECUTORS)))
+    try:
+        write_pages(synthesize_pages_df(spark, N_PAGES, seed=SEED,
+                                        filler_paras=FILLER_PARAS,
+                                        partitions=CORPUS_FILES), pages)
+        row = read_pages(spark, pages).agg(
+            F.count("*").alias("pages"),
+            F.sum(F.length("html")).alias("html_bytes")).first()
+    finally:
+        _stop_spark(spark)
+    return {"pages": row["pages"], "html_mb": round(row["html_bytes"] / 1e6, 1)}
+
+
+def _worker_build(executors: int, pages: str, out: str) -> dict:
+    from perfbench.kg import build_op, catalog_digest
+    from perfbench.run import _stop_spark
+    from perfbench.trace import Tracer
+    from uckg_spark.plans.kg_pipeline import KgDims
+
+    t0 = time.perf_counter()
+    spark = _session(_master(executors))
+    try:
+        _wait_for_executors(spark, executors)
+        dims = KgDims(spark)
+        start_s = time.perf_counter() - t0
+        t0 = time.perf_counter()
+        build_op(spark, dims, pages, out, Tracer(False))
+        op_s = time.perf_counter() - t0
+        digest = catalog_digest(spark, out)
+    finally:
+        _stop_spark(spark)
+    return {"start_s": round(start_s, 2), "op_s": round(op_s, 2),
+            "digest": digest}
+
+
+def _run_worker(*args: object) -> dict:
+    proc = subprocess.run(
+        [sys.executable, os.path.abspath(__file__), "--worker",
+         *map(str, args)],
+        cwd=REPO, capture_output=True, text=True)
+    lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
+    if proc.returncode or not lines:
+        raise RuntimeError(f"worker {args} failed:\n{proc.stderr[-4000:]}")
+    return json.loads(lines[-1])
+
+
+def _side(reps: list[dict]) -> dict:
+    walls = [r["op_s"] for r in reps]
+    med = statistics.median(walls)
+    return {"op_s_reps": walls,
+            "start_s_reps": [r["start_s"] for r in reps],
+            "op_s_median": med,
+            "op_s_spread": round((max(walls) - min(walls)) / med, 3),
+            "graph_matches_oracle": [r["match"] for r in reps]}
+
+
+def main() -> dict:
+    from perfbench.kg import oracle_digest
+
+    lo, hi = EXECUTORS
+    work = tempfile.mkdtemp(prefix="uckg-scaling-")
+    try:
+        pages = os.path.join(work, "pages")
+        expected = oracle_digest(SEED, N_PAGES)
+        corpus = _run_worker("corpus", pages)
+        runs: dict[int, list[dict]] = {lo: [], hi: []}
+        for rep in range(REPS):
+            for n in (lo, hi):
+                r = _run_worker("build", n, pages,
+                                os.path.join(work, f"graph-{n}-{rep}"))
+                r["match"] = r.pop("digest") == expected
+                runs[n].append(r)
+                print(f"executors={n} rep={rep} op_s={r['op_s']} "
+                      f"match={r['match']}", file=sys.stderr)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    sides = {n: _side(runs[n]) for n in (lo, hi)}
+    speedup = sides[lo]["op_s_median"] / sides[hi]["op_s_median"]
+    eff = speedup / (hi // lo)
+    host_cores = os.cpu_count()
+    result = {
+        "job": "perfbench.kg.build_op (build_large_pages op body), cold, "
+               "one op per process",
+        "corpus": {"seed": SEED, "pages": corpus["pages"],
+                   "html_mb": corpus["html_mb"], "files": CORPUS_FILES},
+        "oracle": {"n_edges": expected["n_edges"],
+                   "n_nodes": expected["n_nodes"]},
+        "masters": [_master(lo), _master(hi)],
+        "order": "interleaved " + ",".join(
+            f"{lo},{hi}" for _ in range(REPS)),
+        f"executors_{lo}": sides[lo],
+        f"executors_{hi}": sides[hi],
+        "speedup": round(speedup, 3),
         "scaling_efficiency_N_to_4N": round(eff, 3),
+        "north_rule_0_8": "holds" if eff >= 0.8 else "not met",
+        "all_graphs_match_oracle": all(r["match"] for side in runs.values()
+                                       for r in side),
+        "host_cores": host_cores,
+        "host_note": (
+            f"{hi} executor JVMs plus the driver JVM and its Python "
+            f"process share {host_cores} cores, so the {hi}-executor side "
+            "is oversubscribed" if host_cores and host_cores <= hi else
+            f"{host_cores} cores for {hi} executors plus the driver"),
     }
-    print(json.dumps(summary, indent=2))
-    with open("/root/repo/SCALING.json", "w") as f:
-        json.dump(summary, f, indent=2)
+    with open(os.path.join(REPO, "SCALING.json"), "w") as f:
+        json.dump(result, f, indent=2)
+        f.write("\n")
+    return result
 
 
 if __name__ == "__main__":
     if len(sys.argv) > 2 and sys.argv[1] == "--worker":
-        worker(int(sys.argv[2]))
+        role, *rest = sys.argv[2:]
+        if role == "corpus":
+            print(json.dumps(_worker_corpus(*rest)))
+        else:
+            print(json.dumps(_worker_build(int(rest[0]), *rest[1:])))
     else:
-        orchestrate()
+        print(json.dumps(main(), indent=2))

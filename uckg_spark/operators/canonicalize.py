@@ -9,7 +9,7 @@ true entities.
 
 Algorithm: two-phase contraction. Each round runs an exact union-find over
 every partition's LOCAL edge set (one Arrow mapInPandas pass — the same
-sanctioned kernel family as operators/extract.py), emitting
+sanctioned kernel family as operators/mentions.py), emitting
 (node, local-min-rep) pairs; a node that straddles partitions comes back
 with several reps, and the residual star edges among those reps form the
 next round's (dramatically smaller) graph. This is the contraction family

@@ -20,11 +20,10 @@ Catalyst can see it.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as Ty
 
+from ..kernel.extract import extract_text, text_sha256
 from ..kernel.ids import AhoCorasick, scan_ids
 from ..kernel.linking import build_idf, score_candidates, tokenize
 
@@ -33,6 +32,12 @@ MENTION_SCHEMA = Ty.StructType([
     Ty.StructField("kind", Ty.StringType(), False),
     Ty.StructField("token", Ty.StringType(), False),
     Ty.StructField("canonical_id", Ty.StringType(), False),
+])
+
+EXTRACT_SCHEMA = Ty.StructType([
+    Ty.StructField("url", Ty.StringType(), False),
+    Ty.StructField("text", Ty.StringType(), True),
+    Ty.StructField("text_sha256", Ty.StringType(), True),
 ])
 
 
@@ -71,55 +76,13 @@ class LinkState:
         return out
 
 
-def _scan_batches_fn(bc):
-    def scan_batches(batches):
-        import pandas as pd
-
-        state = bc.value
-        for pdf in batches:
-            urls, kinds, toks, canon = [], [], [], []
-            for url, text in zip(pdf["url"], pdf["text"]):
-                if not text:
-                    continue
-                for kind, tok, _off in scan_ids(text):
-                    urls.append(url)
-                    kinds.append(kind)
-                    toks.append(tok)
-                    canon.append(tok)
-                for kind, surf, cid in state.fuzzy_mentions(text):
-                    urls.append(url)
-                    kinds.append(kind)
-                    toks.append(surf)
-                    canon.append(cid)
-            yield pd.DataFrame(
-                {"url": urls, "kind": kinds, "token": toks, "canonical_id": canon}
-            )
-
-    return scan_batches
-
-
-def detect_mentions(
-    spark: SparkSession, extracted: DataFrame, alias_rows: list[dict]
-) -> DataFrame:
-    """(url, text) → mention rows. Distinct within page is applied
-    downstream (dropDuplicates on the mention key) in the JVM."""
-    bc = spark.sparkContext.broadcast(LinkState(alias_rows))
-    return extracted.select("url", "text").mapInPandas(
-        _scan_batches_fn(bc), schema=MENTION_SCHEMA
-    )
-
-
 def scan_pages(
     spark: SparkSession, pages: DataFrame, alias_rows: list[dict]
 ) -> DataFrame:
     """FUSED extract+scan: pages(url, html) → mention rows in ONE Arrow
-    stage. The extracted text (≈ half the corpus bytes) never crosses back
-    over the JVM↔Python boundary — at 100 TB that boundary IS the pipe, so
-    the fused kernel halves Arrow traffic vs extract_pages ∘
-    detect_mentions (which remain available for stages that need the text
-    itself: byte-identity checks, the streaming extractor)."""
-    from ..kernel.extract import extract_text
-
+    stage, for batch and streaming frames alike. The extracted text
+    (≈ half the corpus bytes) never crosses back over the JVM↔Python
+    boundary — at 100 TB that boundary IS the pipe."""
     bc = spark.sparkContext.broadcast(LinkState(alias_rows))
 
     def fused(batches):
@@ -147,3 +110,25 @@ def scan_pages(
             )
 
     return pages.select("url", "html").mapInPandas(fused, schema=MENTION_SCHEMA)
+
+
+def extract_pages(pages: DataFrame) -> DataFrame:
+    """pages(url, html) → (url, text, text_sha256): the extraction half of
+    ``scan_pages`` on its own, for checks that need the text itself (the
+    byte-identity gate against the oracle, which calls the same
+    ``extract_text``). Projects to (url, html) first so the scan prunes
+    every other column; the input's pre-extracted ``text`` is ignored."""
+
+    def extract(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            texts = [extract_text(h) for h in pdf["html"]]
+            yield pd.DataFrame({
+                "url": pdf["url"],
+                "text": texts,
+                "text_sha256": [text_sha256(t) for t in texts],
+            })
+
+    return pages.select("url", "html").mapInPandas(extract,
+                                                   schema=EXTRACT_SCHEMA)

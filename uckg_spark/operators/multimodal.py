@@ -831,20 +831,9 @@ def parse_mp4(payload: bytes) -> dict | None:
                                             payload[p:p + 4], "big")
                                         p += 8
         if is_video:
-            out["n_video_tracks"] += 1
-            # all fields come from ONE chosen track (the video track
-            # with the most frames; earlier tracks win ties) — the old
-            # per-field mixing could report one track's frame count
-            # with another's dimensions on multi-video-track files
-            if frames > out["n_frames"]:
-                out["n_frames"] = frames
-                if w and h:
-                    out["width"], out["height"] = w, h
-            elif not out["n_frames"] and w and h and not out["width"]:
-                # no track has frame data yet: first track with
-                # dimensions provides them
-                out["width"], out["height"] = w, h
+            video.append((frames, w, h))
 
+    video: list[tuple[int, int, int]] = []  # (frames, w, h) per video trak
     seen_moov = False
     for t, b, e in boxes(0, n):
         if t != b"moov":
@@ -863,6 +852,14 @@ def parse_mp4(payload: bytes) -> dict | None:
                     out["duration_s"] = dur / ts
             elif t2 == b"trak":
                 walk_trak(b2, e2)
+    # (frames, w, h) come from ONE track, never mixed across tracks: the
+    # video track with the most frames (earlier tracks win ties), or, when
+    # no video track has frames, the first one with dimensions
+    out["n_video_tracks"] = len(video)
+    best = max(video, key=lambda v: v[0], default=(0, 0, 0))
+    if not best[0]:
+        best = next((v for v in video if v[1] and v[2]), (0, 0, 0))
+    out["n_frames"], out["width"], out["height"] = best
     return out if seen_moov else None
 
 

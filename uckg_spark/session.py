@@ -72,6 +72,8 @@ def build_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("UCKG_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # no progress bars in the stderr of CLI runs, tests and benchmarks
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # PySpark 4's DataFrame-debugging origin capture adds 2+ Py4J
         # round-trips to EVERY Column/DataFrame API call (call-site info

@@ -2,9 +2,9 @@
 
 The reference is batch-with-checkpoints (SURVEY.md §2.10 — no watermarks or
 event-time windows exist there), so streaming is an OPTIONAL ingest mode:
-the same extract → mention stages run as a file-source stream with
-checkpointed exactly-once sinks. Mention detection and extraction reuse the
-exact batch operators — mapInPandas works unchanged under readStream.
+the same fused extract+mention kernel (``operators.mentions.scan_pages``)
+runs as a file-source stream with checkpointed exactly-once sinks —
+mapInPandas works unchanged under readStream.
 
 A windowed mention-rate aggregate (warc_ts event time + watermark) is
 included as the monitoring surface (the reference's Prometheus counter
@@ -16,8 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extract import extract_pages
-from ..operators.mentions import detect_mentions
+from ..operators.mentions import scan_pages
 from ..sources.pages import PAGES_SCHEMA
 
 
@@ -32,9 +31,9 @@ def read_pages_stream(spark: SparkSession, path: str, max_files: int = 4) -> Dat
 def streaming_mentions(
     spark: SparkSession, pages_stream: DataFrame, alias_rows: list[dict]
 ) -> DataFrame:
-    """Stream of (url, kind, token, canonical_id) mention rows."""
-    extracted = extract_pages(pages_stream)
-    return detect_mentions(spark, extracted, alias_rows)
+    """Stream of (url, kind, token, canonical_id) mention rows: the batch
+    builds' fused ``scan_pages`` kernel, run on the stream."""
+    return scan_pages(spark, pages_stream, alias_rows)
 
 
 def mention_rate(pages_stream: DataFrame) -> DataFrame:
