@@ -15,6 +15,7 @@ Engine-portable hash used throughout (Spark ⇄ DuckDB):
 
 from __future__ import annotations
 
+import atexit
 import os
 import sys
 from collections.abc import Callable
@@ -34,6 +35,18 @@ SF_DEFAULT = "/root/testdata/sf0.001"
 # ---------------------------------------------------------------------------
 # helpers
 # ---------------------------------------------------------------------------
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A temp dir for a query that stages a stream or builds a catalog. It
+    stays on disk for the session (the result DataFrame reads it lazily)
+    and is removed when the interpreter exits."""
+    import shutil
+    import tempfile
+
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
 
 
 # schema cache per (table path, mtime): every query re-opening a table
@@ -1668,11 +1681,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         its sink lazily, and a corpus-sized result must never be collected
         to the driver just to outlive a temp dir."""
         import shutil
-        import tempfile
 
         src = os.path.join(sf, f"{table}.parquet")
         schema = spark.read.parquet(src).schema
-        work = tempfile.mkdtemp(prefix="uckg_stream_q_")
+        work = _scratch_dir("uckg_stream_q_")
         src_dir = os.path.join(work, "src")
         os.makedirs(src_dir)
         shutil.copy(src, os.path.join(src_dir, f"{table}.parquet"))
@@ -1866,8 +1878,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         sequence-ordering semantics, not just row plumbing. The temp
         catalog stays on disk for the session: the result reads its
         parquet lazily (same rule as the streaming rows' sinks)."""
-        import tempfile
-
         from uckg_spark.sources.catalog import GraphCatalog
 
         orders = _t(spark, sf, "orders")
@@ -1878,7 +1888,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 k.alias("k"),
                 F.concat(F.lit(tag), F.col("o_custkey")).alias("v"))
 
-        cat = GraphCatalog(tempfile.mkdtemp(prefix="uckg_mor_q_"))
+        cat = GraphCatalog(_scratch_dir("uckg_mor_q_"))
         cat.write_table("fact", fact(orders, "b:"), n_tasks=4)
         cat.merge_table(spark, "fact",
                         fact(orders.filter(k % 7 == 0), "u1:"),
@@ -1901,8 +1911,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         an incremental downstream consumer reads instead of re-scanning
         the table; cost is O(|changes|). NULL-free per the driver-row
         convention: a delete row's undefined v is '' in both engines."""
-        import tempfile
-
         from uckg_spark.sources.catalog import GraphCatalog
 
         orders = _t(spark, sf, "orders")
@@ -1913,7 +1921,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 k.alias("k"),
                 F.concat(F.lit(tag), F.col("o_custkey")).alias("v"))
 
-        cat = GraphCatalog(tempfile.mkdtemp(prefix="uckg_cdc_q_"))
+        cat = GraphCatalog(_scratch_dir("uckg_cdc_q_"))
         s1 = cat.write_table("fact", fact(orders, "b:"), n_tasks=4)
         cat.merge_table(spark, "fact",
                         fact(orders.filter(k % 7 == 0), "u:"),
@@ -1931,13 +1939,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         reader conforms both dirs to the union schema, so pre-evolution
         rows surface the new column as NULL (−1 sentinel per the
         NULL-free driver-row convention)."""
-        import tempfile
-
         from uckg_spark.sources.catalog import GraphCatalog
 
         orders = _t(spark, sf, "orders")
         k = F.col("o_orderkey")
-        cat = GraphCatalog(tempfile.mkdtemp(prefix="uckg_evo_q_"))
+        cat = GraphCatalog(_scratch_dir("uckg_evo_q_"))
         cat.write_table(
             "fact",
             orders.filter(k % 2 == 0).select(
@@ -1961,13 +1967,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         through expiry and the read resolves the name back to exactly
         the v1 row set (the audit/rollback pin: reproduce the table a
         model was trained on)."""
-        import tempfile
-
         from uckg_spark.sources.catalog import GraphCatalog
 
         orders = _t(spark, sf, "orders")
         k = F.col("o_orderkey")
-        cat = GraphCatalog(tempfile.mkdtemp(prefix="uckg_tag_q_"))
+        cat = GraphCatalog(_scratch_dir("uckg_tag_q_"))
         cat.write_table(
             "fact",
             orders.filter(k % 3 == 0).select(
@@ -1997,8 +2001,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         check (fewer files opened) is pinned by pytest; the driver row
         proves no-rows-lost/none-invented under pruning across an
         append + MoR-merge history."""
-        import tempfile
-
         from uckg_spark.sources.catalog import GraphCatalog
 
         orders = _t(spark, sf, "orders")
@@ -2009,7 +2011,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 k.alias("k"),
                 F.concat(F.lit(tag), F.col("o_custkey")).alias("v"))
 
-        cat = GraphCatalog(tempfile.mkdtemp(prefix="uckg_prune_q_"))
+        cat = GraphCatalog(_scratch_dir("uckg_prune_q_"))
         # range-disjoint files: sort by k so footer min/max actually cut
         lo_half = fact(orders.filter(k % 2 == 0), "b:") \
             .repartitionByRange(4, "k")

@@ -15,6 +15,24 @@ Word-boundary discipline: a match must not be embedded in a longer
 alphanumeric/dash run — ``CVE-123`` must NOT match (4-digit year missing)
 and ``XCVE-2024-1234`` / ``CVE-2024-12345Z`` must not match either
 (FIXTURES.md decoy spec).
+
+Both scans prefilter, then verify: a C-speed literal search finds
+candidate starts, and the expensive matcher runs only there.
+
+- ``scan_ids``: every ``_SCAN_RE`` match starts with ``CVE-``, ``CWE-``,
+  ``CAPEC-``, ``D3-``, ``cpe:2.3:`` or a ``[TGSMC]A?\\d{4}`` run, so
+  ``str.find`` over those literals plus one finditer of the run give a
+  superset of the match starts. ``_SCAN_RE.match`` at each start in
+  order, resuming at the match end, is then exactly ``finditer``: the
+  lookbehind still sees the text before the start.
+- ``AhoCorasick.find``: a match in the normalized text begins with its
+  pattern's first word, which holds no whitespace and so appears verbatim
+  in ``text.casefold()``. The needle ``find``s run there; the verifier is
+  the same longest-first alternation with each pattern space as ``\\s+``
+  (``re``'s ``\\s`` is ``str.isspace``, the class ``split()`` collapses).
+  Offsets are mapped into normalized-text space only for the hits.
+
+``oracle/detect.py`` keeps the plain scans as the golden copy.
 """
 
 from __future__ import annotations
@@ -64,20 +82,41 @@ def classify_id(token: str) -> str | None:
     return None
 
 
+# every _SCAN_RE match starts with one of these literals or a _RUN_RE hit
+_LITERALS = ("CVE-", "CWE-", "CAPEC-", "D3-", "cpe:2.3:")
+_RUN_RE = re.compile(r"[TGSMC]A?\d{4}")
+
+
 def scan_ids(text: str | None) -> list[tuple[str, str, int]]:
     """Return [(kind, id, char_offset)] for every well-formed identifier.
 
     Deterministic: document order, overlaps resolved longest-match by the
-    alternation order above.
+    alternation order above. Equal to ``_SCAN_RE.finditer`` over the text,
+    with the matcher run only at candidate starts (module docstring).
     """
     if not text:
         return []
+    starts = [m.start() for m in _RUN_RE.finditer(text)]
+    find = text.find
+    for lit in _LITERALS:
+        i = find(lit)
+        while i != -1:
+            starts.append(i)
+            i = find(lit, i + 1)
     out: list[tuple[str, str, int]] = []
-    for m in _SCAN_RE.finditer(text):
+    end = 0
+    match = _SCAN_RE.match
+    for s in sorted(starts):
+        if s < end:
+            continue  # inside the previous match, as finditer resumes
+        m = match(text, s)
+        if m is None:
+            continue
+        end = m.end()
         tok = m.group("id")
         kind = classify_id(tok)
         if kind is not None:
-            out.append((kind, tok, m.start("id")))
+            out.append((kind, tok, s))
     return out
 
 
@@ -107,6 +146,10 @@ def normalize_surface(s: str) -> str:
     return " ".join(s.casefold().split())
 
 
+# whitespace runs that collapsing shortens (by len - 1 each)
+_WS_RUNS = re.compile(r"\s{2,}")
+
+
 class AhoCorasick:
     """Multi-pattern whole-word matcher. ``find(text)`` returns
     [(surface_form, char_offset)] over the normalized text in document
@@ -114,12 +157,13 @@ class AhoCorasick:
 
     Two engines, ONE semantics (equivalence is tested on the fixture
     corpus, tests/test_kernel.py):
-    - ≤ ``_REGEX_MAX_PATTERNS`` patterns: a compiled longest-first
-      alternation — C speed, the fixture/bench path.
+    - ≤ ``_REGEX_MAX_PATTERNS`` patterns: first-word needles over the
+      casefolded text, verified by a compiled longest-first alternation
+      (module docstring) — C speed, the fixture/bench path.
     - above that: the classic trie + failure-link automaton — O(text)
       regardless of dictionary size, the production path for ~1.3M CPE
-      vendor/product strings. Built once on the driver, shipped via a
-      Spark broadcast.
+      vendor/product strings. Built on first use, so a regex-engine
+      matcher ships no trie in its Spark broadcast.
 
     The fast path assumes patterns are not nested within one another
     (true for vendor-product alias tables); the trie path reports nested
@@ -129,46 +173,33 @@ class AhoCorasick:
     _REGEX_MAX_PATTERNS = 2000
 
     def __init__(self, patterns: list[str]):
-        norm_patterns = sorted(
-            {normalize_surface(p) for p in patterns if normalize_surface(p)},
-            key=lambda s: (-len(s), s),
-        )
-        self._regex = None
-        self._match_re = None
-        self._needles: list[str] = []
-        if len(norm_patterns) <= self._REGEX_MAX_PATTERNS:
-            body = "|".join(re.escape(p) for p in norm_patterns)
-            # boundary class matches _is_word_char below
-            self._regex = re.compile(
-                r"(?<![a-z0-9._])(?:" + body + r")(?![a-z0-9._])"
-            ) if norm_patterns else re.compile(r"(?!)")
-            # anchored variant for the needle-prefiltered scan: same
-            # longest-first alternation + trailing boundary; the leading
-            # boundary is checked explicitly at the candidate position
-            self._match_re = re.compile(
-                r"(?:" + body + r")(?![a-z0-9._])"
-            ) if norm_patterns else re.compile(r"(?!)")
-            # candidate needles: a true match at position i implies
-            # norm[i:i+len(needle)] equals some pattern's prefix, so
-            # C-speed str.find over the needles yields a superset of match
-            # starts. Keep only needles that are not extensions of another
-            # (a prefix needle's hit set covers its extensions').
-            prefixes = sorted({p[: min(len(p), 6)] for p in norm_patterns})
-            for nd in prefixes:
-                if not any(nd != o and nd.startswith(o) for o in prefixes):
-                    self._needles.append(nd)
-        self._build_trie(patterns)
-
-    def _build_trie(self, patterns: list[str]):
-        # nodes: list of dicts char->node_id
-        self._next: list[dict[str, int]] = [{}]
-        self._fail: list[int] = [0]
-        self._out: list[list[str]] = [[]]
         # dedup on NORMALIZED form — distinct raw styles ("ACMESOFT webgate",
         # "Acmesoft Webgate") collapse to one pattern
-        for norm in sorted({normalize_surface(p) for p in patterns}):
-            if not norm:
-                continue
+        self._patterns = sorted({normalize_surface(p) for p in patterns} - {""})
+        self._next: list[dict[str, int]] | None = None  # trie, on first use
+        self._regex = None
+        self._needles: list[str] = []
+        if len(self._patterns) <= self._REGEX_MAX_PATTERNS:
+            longest_first = sorted(self._patterns, key=lambda s: (-len(s), s))
+            body = "|".join(r"\s+".join(map(re.escape, p.split(" ")))
+                            for p in longest_first)
+            # matched at candidate starts: the trailing boundary is the
+            # lookahead, the leading one is checked in find (_is_word_char_lc)
+            self._regex = re.compile(
+                r"(?:" + body + r")(?![a-z0-9._])"
+            ) if longest_first else re.compile(r"(?!)")
+            # keep only first words that do not extend another (a prefix
+            # needle's hits cover its extensions')
+            words = sorted({p.split(" ")[0] for p in self._patterns})
+            self._needles = [w for w in words if not any(
+                w != o and w.startswith(o) for o in words)]
+
+    def _build_trie(self):
+        # nodes: list of dicts char->node_id
+        self._next = [{}]
+        self._fail: list[int] = [0]
+        self._out: list[list[str]] = [[]]
+        for norm in self._patterns:
             node = 0
             for ch in norm:
                 nxt = self._next[node].get(ch)
@@ -204,44 +235,50 @@ class AhoCorasick:
         earliest matching position take the longest pattern, then continue
         after its end. Offsets are into the normalized string.
 
-        Regex path = needle prefilter (str.find, C speed) + anchored
-        longest-first match at candidate positions — byte-identical output
-        to running the full alternation finditer over the text (pinned by
-        tests), ~6× cheaper on mention-sparse 10 KB pages because the
-        backtracking alternation only ever runs at needle hits."""
-        norm = normalize_surface(text)
-        if self._regex is not None:
-            starts: set[int] = set()
-            find = norm.find
-            for nd in self._needles:
-                i = find(nd)
-                while i != -1:
-                    starts.add(i)
-                    i = find(nd, i + 1)
-            if not starts:
-                return []
-            out: list[tuple[str, int]] = []
-            end = -1
-            match = self._match_re.match
-            for pos in sorted(starts):
-                if pos <= end:
-                    continue  # inside the previous match (non-overlap)
-                if pos > 0 and self._is_word_char_lc(norm[pos - 1]):
-                    continue  # leading boundary (the finditer lookbehind)
-                m = match(norm, pos)
-                if m:
-                    out.append((m.group(0), pos))
-                    end = pos + len(m.group(0)) - 1
-            return out
-        return self._find_trie(norm)
+        Regex path: first-word needle ``find``s (C speed) over
+        ``text.casefold()``, the anchored alternation verified only at
+        needle hits, then each hit's offset mapped into normalized-text
+        space. Equal to the normalize-then-match scan of
+        ``oracle/detect.py`` (pinned by tests/test_detect_kernel.py)."""
+        if self._regex is None:
+            return self._find_trie(normalize_surface(text))
+        cf = text.casefold()
+        starts: set[int] = set()
+        find = cf.find
+        for nd in self._needles:
+            i = find(nd)
+            while i != -1:
+                starts.add(i)
+                i = find(nd, i + 1)
+        out: list[tuple[str, int]] = []
+        end = 0
+        # normalized offset = cf offset - chars that collapsing drops
+        # before it, counted from the previous hit on; a leading run goes
+        # whole (one char here, the rest in its _WS_RUNS match)
+        last, dropped = 0, int(cf[:1].isspace())
+        match = self._regex.match
+        for pos in sorted(starts):
+            if pos < end:
+                continue  # inside the previous match (non-overlap)
+            if pos > 0 and self._is_word_char_lc(cf[pos - 1]):
+                continue  # leading boundary
+            m = match(cf, pos)
+            if m:
+                dropped += sum(r.end() - r.start() - 1
+                               for r in _WS_RUNS.finditer(cf, last, pos))
+                last, end = pos, m.end()
+                out.append((" ".join(m.group(0).split()), pos - dropped))
+        return out
 
     @staticmethod
     def _is_word_char_lc(ch: str) -> bool:
         # boundary class of the regex path: [a-z0-9._] over the already-
-        # casefolded normalized text (the lookbehind it replaces)
+        # casefolded text
         return ("a" <= ch <= "z") or ("0" <= ch <= "9") or ch in "._"
 
     def _find_trie(self, norm: str) -> list[tuple[str, int]]:
+        if self._next is None:
+            self._build_trie()
         hits: list[tuple[str, int]] = []
         node = 0
         for i, ch in enumerate(norm):

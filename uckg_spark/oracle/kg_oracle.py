@@ -39,9 +39,9 @@ import json
 from ..fixtures import dicts as D
 from ..kernel import templates as T
 from ..kernel.extract import extract_text
-from ..kernel.ids import AhoCorasick, scan_ids
 from ..kernel.jsonenc import titles_lang_map_literal
 from ..kernel.linking import build_idf, score_candidates
+from . import detect
 from . import emitters as E
 
 
@@ -97,7 +97,7 @@ class OracleDictionaries:
             )
         self.alias_kind = {a["canonical_id"]: a["kind"] for a in alias}
         self.idf = build_idf([a["surface_form"] for a in alias])
-        self.aho = AhoCorasick([a["surface_form"] for a in alias])
+        self.aliases = detect.AliasMatcher([a["surface_form"] for a in alias])
         # valid relationship rows for R7: P3 null-source drop, P5 catalog
         # type-pair filter, J4 target-FK check (all 7 typed pairs,
         # attack_rml.ttl:253-403)
@@ -115,7 +115,7 @@ def page_mentions(text: str, dicts: OracleDictionaries) -> dict[str, set[str]]:
 
     out = {"cve": set(), "cwe": set(), "capec": set(), "attack": set(),
            "d3fend": set(), "cpe_found": set(), "cpe_miss": set()}
-    for kind, tok, _off in scan_ids(text):
+    for kind, tok, _off in detect.scan_ids(text):
         if kind == "cve":
             out["cve"].add(tok)
         elif kind == "cwe" and tok in dicts.cwe_by_id:
@@ -131,8 +131,8 @@ def page_mentions(text: str, dicts: OracleDictionaries) -> dict[str, set[str]]:
                 out["cpe_found"].add(tok)
             else:
                 out["cpe_miss"].add(tok)
-    # fuzzy surface mentions (Aho–Corasick over normalized text)
-    for surf, _off in dicts.aho.find(text):
+    # fuzzy surface mentions (the golden alias matcher, over normalized text)
+    for surf, _off in dicts.aliases.find(text):
         key = " ".join(tokenize(surf))
         cands = dicts.alias_by_surface.get(key)
         if not cands:
