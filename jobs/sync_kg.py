@@ -39,8 +39,7 @@ def run(spark, pages_catalog: str, graph: str, pages_table: str = "pages",
     )
     if compact_after > 0 and summary["status"] == "synced":
         for table, compact in (
-            ("edges", lambda: graph_cat.compact_edges(
-                spark, n_tasks=n_tasks)),
+            ("edges", lambda: graph_cat.compact_edges(spark)),
             ("mentions", lambda: graph_cat.compact_table(
                 spark, "mentions", n_tasks=n_tasks)),
         ):
@@ -63,7 +62,10 @@ def main() -> None:
                     help="catalog root holding the pages table")
     ap.add_argument("--graph", required=True, help="graph catalog root")
     ap.add_argument("--pages-table", default="pages")
-    ap.add_argument("--n-tasks", type=int, default=32)
+    ap.add_argument("--n-tasks", type=int, default=32,
+                    help="max files per mention-store write and per "
+                         "mention-store compaction (the edge and node "
+                         "writes are sized from their data)")
     ap.add_argument("--mention-partitions", type=int, default=None)
     ap.add_argument("--compact-after", type=int, default=0,
                     help="compact edges/mentions when their heads span "

@@ -57,13 +57,26 @@ def test_multivalued_props_survive(spark, fixture_pages, kg_dims):
         triples.unpersist()
 
 
-def test_hot_pred_spreads_over_writers(spark, tmp_path):
-    """A skewed predicate must NOT serialize behind one writer task:
-    repartition(n, pred, subj) spreads it over many tasks, each writing
-    its own file into the pred directory (round-1 used repartition('pred')
-    → exactly one task per predicate)."""
+def _pred_files(root, snap):
+    """Edge data files of snapshot ``snap``, by pred directory."""
     import glob
+    import os
 
+    files = glob.glob(os.path.join(
+        root, "edges", f"snap-{snap}", "pred=*", "*.parquet"))
+    out: dict[str, list[str]] = {}
+    for f in files:
+        out.setdefault(os.path.basename(os.path.dirname(f)), []).append(f)
+    return out
+
+
+def test_hot_pred_spreads_over_writers(spark, tmp_path):
+    """A skewed predicate must NOT serialize behind one writer task: the
+    edge write shuffles on (pred, subj) and AQE splits a partition past
+    the advisory size, so a hot predicate lands in several files of its
+    pred directory (round-1 used repartition('pred') → exactly one task
+    per predicate). The advisory size is set below the predicate's
+    shuffle bytes here, as a large graph would exceed the default."""
     from pyspark.sql import functions as F
 
     edges = spark.range(20000).select(
@@ -71,9 +84,29 @@ def test_hot_pred_spreads_over_writers(spark, tmp_path):
         F.lit("ucohasCVE_ID").alias("pred"),  # one hot predicate
         F.concat(F.lit("o"), F.col("id")).alias("obj"),
     )
-    cat = GraphCatalog(str(tmp_path / "skewgraph"))
-    snap = cat.write_edges(edges, n_tasks=8)
-    files = glob.glob(str(
-        tmp_path / f"skewgraph/edges/snap-{snap}/pred=ucohasCVE_ID/*.parquet"))
-    assert len(files) > 1, files
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    try:
+        cat = GraphCatalog(str(tmp_path / "skewgraph"))
+        snap = cat.write_edges(edges)
+    finally:
+        spark.conf.set(key, before)
+    files = _pred_files(str(tmp_path / "skewgraph"), snap)
+    assert list(files) == ["pred=ucohasCVE_ID"]
+    assert len(files["pred=ucohasCVE_ID"]) > 1, files
     assert cat.latest_snapshot("edges")["rows"] == 20000
+
+
+def test_small_graph_writes_one_file_per_pred(spark, tmp_path):
+    """A small graph is not spread over a fixed task count: AQE coalesces
+    the write's shuffle, so each pred directory holds at most one file
+    (a fixed 32-way shuffle wrote one file per task per predicate)."""
+    rows = [(f"s{i}", f"p{i % 7}", f"o{i}") for i in range(700)]
+    edges = spark.createDataFrame(rows, "subj string, pred string, obj string")
+    cat = GraphCatalog(str(tmp_path / "small"))
+    snap = cat.write_edges(edges)
+    files = _pred_files(str(tmp_path / "small"), snap)
+    assert sorted(files) == [f"pred=p{k}" for k in range(7)]
+    assert all(len(fs) == 1 for fs in files.values()), files
+    assert cat.read_edges(spark).count() == 700

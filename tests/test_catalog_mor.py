@@ -76,8 +76,8 @@ def test_delete_rows_retracts_edges_across_dirs(spark, tmp_path):
     partitioned edges table reach rows in EVERY snapshot dir, and the
     pred partition filter still composes with the MoR anti-join."""
     cat = GraphCatalog(str(tmp_path / "g"))
-    cat.write_edges(_edges(spark, 4, "a"), n_tasks=2)
-    cat.write_edges(_edges(spark, 3, "b"), n_tasks=2, mode="append")
+    cat.write_edges(_edges(spark, 4, "a"))
+    cat.write_edges(_edges(spark, 3, "b"), mode="append")
     dead = spark.createDataFrame(
         [("a-s1", "ucohasCVE_ID", "o1"), ("b-s2", "ucohasCVE_ID", "o2")],
         "subj string, pred string, obj string")
@@ -91,17 +91,17 @@ def test_delete_rows_retracts_edges_across_dirs(spark, tmp_path):
 def test_compact_materializes_and_expire_frees_delete_files(
         spark, tmp_path):
     cat = GraphCatalog(str(tmp_path / "g"))
-    cat.write_edges(_edges(spark, 5, "a"), n_tasks=2)
+    cat.write_edges(_edges(spark, 5, "a"))
     dead = _edges(spark, 2, "a")  # a-s0, a-s1
     cat.delete_rows("edges", dead, ["subj", "pred", "obj"])
-    s3 = cat.compact_edges(spark, n_tasks=2)
+    s3 = cat.compact_edges(spark)
     head = cat.latest_snapshot("edges")
     assert head["snapshot_id"] == s3
     assert len(head["dirs"]) == 1 and head["deletes"] == []
     assert head["rows"] == 3  # net count after materializing deletes
     assert cat.read_edges(spark).count() == 3
     # compacting an already-net head is a no-op
-    assert cat.compact_edges(spark, n_tasks=2) == s3
+    assert cat.compact_edges(spark) == s3
     removed = cat.expire_snapshots("edges", keep_last=1)
     assert any(r.startswith("edges/del-") for r in removed)
     assert cat.read_edges(spark).count() == 3
@@ -275,7 +275,7 @@ def test_delete_rows_rejects_unknown_key_column(spark, tmp_path):
     assert len(cat.snapshots("t")) == n_before
     assert _read(spark, cat, "t") == {(1, "a")}
     # layout table (no recorded schema): validated via a footer read
-    cat.write_edges(_edges(spark, 3, "a"), n_tasks=2)
+    cat.write_edges(_edges(spark, 3, "a"))
     with pytest.raises(ValueError, match="not in table"):
         cat.delete_rows("edges",
                         spark.createDataFrame([("x",)], "nope string"),
@@ -287,9 +287,9 @@ def test_changelog_reads_multi_dir_edges(spark, tmp_path):
     several snapshot dirs (each its own partitionBy root) — the plain
     multi-path head read would die with CONFLICTING_DIRECTORY_STRUCTURES."""
     cat = GraphCatalog(str(tmp_path / "g"))
-    s1 = cat.write_edges(_edges(spark, 3, "a"), n_tasks=2)
-    cat.write_edges(_edges(spark, 2, "b"), n_tasks=2, mode="append")
-    cat.write_edges(_edges(spark, 2, "c"), n_tasks=2, mode="append")
+    s1 = cat.write_edges(_edges(spark, 3, "a"))
+    cat.write_edges(_edges(spark, 2, "b"), mode="append")
+    cat.write_edges(_edges(spark, 2, "c"), mode="append")
     got = {tuple(r) for r in cat.read_changes(spark, "edges", s1)
            .select("subj", "pred", "obj", "_change_type").collect()}
     assert got == {

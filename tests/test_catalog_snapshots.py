@@ -25,8 +25,8 @@ def _edges(spark, n, tag):
 
 def test_time_travel_and_overwrite(spark, tmp_path):
     cat = GraphCatalog(str(tmp_path / "g"))
-    s1 = cat.write_edges(_edges(spark, 5, "v1"), n_tasks=2)
-    s2 = cat.write_edges(_edges(spark, 8, "v2"), n_tasks=2)
+    s1 = cat.write_edges(_edges(spark, 5, "v1"))
+    s2 = cat.write_edges(_edges(spark, 8, "v2"))
     assert cat.latest_snapshot("edges")["snapshot_id"] == s2
     assert cat.read_edges(spark).count() == 8
     # time travel to the superseded snapshot still sees the old rows
@@ -40,8 +40,8 @@ def test_time_travel_and_overwrite(spark, tmp_path):
 
 def test_append_snapshot_unions_parent(spark, tmp_path):
     cat = GraphCatalog(str(tmp_path / "g"))
-    cat.write_edges(_edges(spark, 4, "a"), n_tasks=2)
-    s2 = cat.write_edges(_edges(spark, 3, "b"), n_tasks=2, mode="append")
+    cat.write_edges(_edges(spark, 4, "a"))
+    s2 = cat.write_edges(_edges(spark, 3, "b"), mode="append")
     assert cat.latest_snapshot("edges")["rows"] == 7
     got = cat.read_edges(spark)
     assert got.count() == 7
@@ -57,10 +57,9 @@ def test_empty_append_commits_without_data_dir(spark, tmp_path):
     partitioned write leaves a dir with no partition subdirectories,
     which would poison every later per-dir read."""
     cat = GraphCatalog(str(tmp_path / "g"))
-    s1 = cat.write_edges(_edges(spark, 4, "a"), n_tasks=2)
-    s2 = cat.write_edges(
-        _edges(spark, 4, "b").filter(F.lit(False)), n_tasks=2,
-        mode="append")
+    s1 = cat.write_edges(_edges(spark, 4, "a"))
+    s2 = cat.write_edges(_edges(spark, 4, "b").filter(F.lit(False)),
+                         mode="append")
     assert s2 != s1  # the commit happened
     snap = cat.latest_snapshot("edges")
     assert snap["snapshot_id"] == s2
@@ -68,7 +67,7 @@ def test_empty_append_commits_without_data_dir(spark, tmp_path):
     assert snap["dirs"] == cat.snapshot("edges", s1)["dirs"]
     # reads across the chain still work, before and after a real append
     assert cat.read_edges(spark).count() == 4
-    cat.write_edges(_edges(spark, 3, "c"), n_tasks=2, mode="append")
+    cat.write_edges(_edges(spark, 3, "c"), mode="append")
     assert cat.read_edges(spark).count() == 7
 
 
@@ -79,7 +78,7 @@ def test_orphan_dir_invisible_and_expired(spark, tmp_path):
     dir is indistinguishable from an in-flight writer's pre-commit dir
     (delete_rows/_merge_mor write data BEFORE the commit CAS)."""
     cat = GraphCatalog(str(tmp_path / "g"))
-    s1 = cat.write_edges(_edges(spark, 5, "v1"), n_tasks=2)
+    s1 = cat.write_edges(_edges(spark, 5, "v1"))
     # simulate a crashed writer: data on disk, never committed
     orphan = tmp_path / "g" / "edges" / "snap-deadbeefcafe"
     _edges(spark, 99, "crash").write.parquet(str(orphan))
@@ -97,15 +96,15 @@ def test_orphan_dir_invisible_and_expired(spark, tmp_path):
 
 def test_expire_keeps_head_drops_old(spark, tmp_path):
     cat = GraphCatalog(str(tmp_path / "g"))
-    s1 = cat.write_edges(_edges(spark, 5, "v1"), n_tasks=2)
-    s2 = cat.write_edges(_edges(spark, 8, "v2"), n_tasks=2)
+    s1 = cat.write_edges(_edges(spark, 5, "v1"))
+    s2 = cat.write_edges(_edges(spark, 8, "v2"))
     removed = cat.expire_snapshots("edges", keep_last=1)
     assert removed == [os.path.join("edges", f"snap-{s1}")]
     assert cat.read_edges(spark).count() == 8
     with pytest.raises(FileNotFoundError):
         cat.read_edges(spark, snapshot_id=s1)
     # append-retained dirs are never expired while the head references them
-    s3 = cat.write_edges(_edges(spark, 2, "v3"), n_tasks=2, mode="append")
+    s3 = cat.write_edges(_edges(spark, 2, "v3"), mode="append")
     removed = cat.expire_snapshots("edges", keep_last=1)
     assert removed == []  # s2's dir is part of s3's file set
     assert cat.read_edges(spark, snapshot_id=s3).count() == 10
@@ -115,7 +114,7 @@ def test_commit_conflict_detected(spark, tmp_path):
     """Optimistic concurrency: a commit based on a stale parent must fail
     instead of clobbering the interleaved writer's snapshot."""
     cat = GraphCatalog(str(tmp_path / "g"))
-    s1 = cat.write_edges(_edges(spark, 3, "v1"), n_tasks=2)
+    s1 = cat.write_edges(_edges(spark, 3, "v1"))
     with pytest.raises(CommitConflictError):
         cat._commit("edges", {
             "table": "edges", "snapshot_id": "stalecommit00",
@@ -188,21 +187,21 @@ def test_nodes_snapshot_roundtrip(spark, tmp_path):
     cat = GraphCatalog(str(tmp_path / "g"))
     n1 = spark.range(4).select(F.concat(F.lit("u"), F.col("id")).alias("uri"))
     n2 = spark.range(6).select(F.concat(F.lit("w"), F.col("id")).alias("uri"))
-    s1 = cat.write_nodes(n1, n_buckets=2)
-    cat.write_nodes(n2, n_buckets=2)
+    s1 = cat.write_nodes(n1)
+    cat.write_nodes(n2)
     assert cat.read_nodes(spark).count() == 6
     assert cat.read_nodes(spark, snapshot_id=s1).count() == 4
 
 
 def test_compaction_rewrites_head_to_one_dir(spark, tmp_path):
     cat = GraphCatalog(str(tmp_path / "g"))
-    cat.write_edges(_edges(spark, 5, "a"), n_tasks=2)
-    cat.write_edges(_edges(spark, 4, "b"), n_tasks=2, mode="append")
-    s3 = cat.write_edges(_edges(spark, 3, "c"), n_tasks=2, mode="append")
+    cat.write_edges(_edges(spark, 5, "a"))
+    cat.write_edges(_edges(spark, 4, "b"), mode="append")
+    s3 = cat.write_edges(_edges(spark, 3, "c"), mode="append")
     assert len(cat.latest_snapshot("edges")["dirs"]) == 3
     before = {tuple(r) for r in cat.read_edges(spark).collect()}
 
-    s4 = cat.compact_edges(spark, n_tasks=2)
+    s4 = cat.compact_edges(spark)
     head = cat.latest_snapshot("edges")
     assert head["snapshot_id"] == s4 and len(head["dirs"]) == 1
     assert head["rows"] == 12
@@ -212,7 +211,7 @@ def test_compaction_rewrites_head_to_one_dir(spark, tmp_path):
     assert {tuple(r) for r in
             cat.read_edges(spark, snapshot_id=s3).collect()} == before
     # a second compaction is a no-op (already one dir)
-    assert cat.compact_edges(spark, n_tasks=2) == s4
+    assert cat.compact_edges(spark) == s4
     # expiry then drops the small pre-compaction dirs; the head survives
     removed = cat.expire_snapshots("edges", keep_last=1)
     assert len(removed) == 3
@@ -225,9 +224,9 @@ def test_tags_pin_snapshots_through_expiry(spark, tmp_path):
     """Iceberg-tag semantics: a named ref protects its snapshot's data
     dirs from expire_snapshots; dropping the tag releases them."""
     cat = GraphCatalog(str(tmp_path / "g"))
-    s1 = cat.write_edges(_edges(spark, 4, "v1"), n_tasks=2)
+    s1 = cat.write_edges(_edges(spark, 4, "v1"))
     assert cat.tag("edges", "train-v1") == s1
-    s2 = cat.write_edges(_edges(spark, 6, "v2"), n_tasks=2)
+    s2 = cat.write_edges(_edges(spark, 6, "v2"))
     assert cat.tags("edges") == {"train-v1": s1}
     # expiry keeps the tagged snapshot even though only the head would
     # otherwise survive keep_last=1

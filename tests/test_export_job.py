@@ -22,7 +22,7 @@ def _build_graph(spark, fixture_pages, kg_dims, out, n_pages):
         spark, pages_df(spark, fixture_pages[:n_pages]), kg_dims)
     nodes, edges = materialize_graph(triples)
     cat = GraphCatalog(out)
-    return cat.write_edges(edges, n_tasks=4), cat.write_nodes(nodes)
+    return cat.write_edges(edges), cat.write_nodes(nodes)
 
 
 def _collect_view(spark, out, **snaps):
@@ -82,7 +82,7 @@ def test_streaming_ntriples_ingest(spark, fixture_pages, kg_dims, tmp_path):
     def land(batch_df, _epoch):
         dst.write_edges(
             batch_df.filter(~F.col("obj_is_literal"))
-            .select("subj", "pred", "obj"), n_tasks=2, mode="append")
+            .select("subj", "pred", "obj"), mode="append")
 
     (parsed.writeStream.foreachBatch(land)
      .option("checkpointLocation", str(tmp_path / "ckpt"))

@@ -1,39 +1,90 @@
-"""The fast HTML text scanner must be byte-identical to the html.parser
-extractor on every input — on the fast path by construction, elsewhere by
-falling back to the parser itself. These tests pin both halves:
-equivalence on the fixture corpus + adversarial constructs, and the
-guarantee that fixture/bench pages actually TAKE the fast path (otherwise
-the optimization silently evaporates)."""
+"""The split-then-verify extraction kernel must be byte-identical to the
+html.parser extractor on every input — on the fast path by construction,
+elsewhere by falling back to the parser itself. The golden copy the
+oracle extracts with (``uckg_spark.oracle.extract``) is that parser
+alone. These tests pin both halves: equivalence on the fixture corpus,
+large bench pages, pages whose every tag is unique and adversarial
+constructs, and the guarantee that such pages actually TAKE the fast
+path (otherwise the optimization silently evaporates)."""
+
+import ast
+import glob
+import os
+import random
+import time
 
 import pytest
 
 from uckg_spark.fixtures.pages import generate_pages, page_row
+from uckg_spark.kernel import extract as kernel
 from uckg_spark.kernel.extract import _FALLBACK, _fast_extract, extract_text
+from uckg_spark.oracle import extract as golden
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _parser_extract(html: str) -> str:
-    from uckg_spark.kernel.extract import _TextExtractor
-
-    p = _TextExtractor()
+    p = kernel._TextExtractor()
     p.feed(html)
     p.close()
     return p.text()
 
 
+def _check(html: str, fast_path: bool = False) -> None:
+    """Kernel == golden copy == the kernel's own parser fallback."""
+    got = extract_text(html)
+    assert got == golden.extract_text(html)
+    assert got == _parser_extract(html)
+    if fast_path:
+        assert _fast_extract(html) is not _FALLBACK, html[:200]
+
+
 def test_fixture_corpus_byte_identical_and_fast_path():
     for row in generate_pages(300, seed=7):
-        html = row["html"].decode("utf-8", errors="replace")
-        fast = _fast_extract(html)
-        assert fast is not _FALLBACK, "fixture page fell off the fast path"
-        assert fast == _parser_extract(html)
+        _check(row["html"].decode("utf-8", errors="replace"), fast_path=True)
+
+
+@pytest.mark.parametrize("seed", [6101, 6102])
+def test_large_bench_pages_equal_and_fast_path(seed):
+    for i in range(12):
+        _check(page_row(i, seed, 1400)["html"].decode("utf-8"),
+               fast_path=True)
 
 
 def test_bench_filler_pages_take_fast_path():
     for i in range(50):
-        html = page_row(i, seed=42, filler_paras=50)["html"].decode("utf-8")
-        fast = _fast_extract(html)
-        assert fast is not _FALLBACK
-        assert fast == _parser_extract(html)
+        _check(page_row(i, seed=42, filler_paras=50)["html"].decode("utf-8"),
+               fast_path=True)
+
+
+def _unique_attr_page(i: int, seed: int) -> str:
+    """A bench page whose paragraphs each carry their own link and id,
+    so nearly every start tag on it is distinct."""
+    html = page_row(i, seed, 200)["html"].decode("utf-8")
+    parts = html.split("<p>")
+    rng = random.Random(f"{seed}:{i}")
+    return parts[0] + "".join(
+        f'<p id="p{k}" class=c{rng.randrange(9)} data-k=\'{k}\'>'
+        f'<a href="/advisory/{seed}/{i}/{k}?ref={rng.random():.6f}"'
+        f' rel=nofollow target=_blank>link {k}</a> ' + part
+        for k, part in enumerate(parts[1:]))
+
+
+@pytest.mark.parametrize("seed", [6103, 6104])
+def test_unique_attribute_pages_equal_and_fast_path(seed):
+    for i in range(8):
+        _check(_unique_attr_page(i, seed), fast_path=True)
+
+
+def test_doctype_comment_page_takes_fast_path():
+    html = ("<!DOCTYPE html><!-- build 7 --><html><head><title>t</title>"
+            "<style type=\"text/css\">p > a { x: 1 }</style>"
+            "<script src='a.js'></script><script>if (a<b) {}</script></head>"
+            "<body><!-- nav --><p class=\"x\">CVE-2024-0001 &amp; more</p>"
+            "<?xml-stylesheet href='s'?><br/><img src=a.png alt=\"\" />"
+            "</body></html>")
+    _check(html, fast_path=True)
+    assert extract_text(html) == "tCVE-2024-0001 & more"
 
 
 ADVERSARIAL = [
@@ -44,56 +95,137 @@ ADVERSARIAL = [
     "<p>unclosed",
     "<p>x</p ",                       # unterminated end tag
     "<p class=\"a>b\">quoted gt</p>",  # '>' inside quoted attr
+    "<p title='x > y'>single-quoted gt</p>",
     "<p a='1' b=2 c>bare attrs</p>",
     "<P>CASE</P>",
     "<xhtml:p>ns text</xhtml:p>",
     "<script>var x = '<p>not text</p>';</script>after",
     "<script >spaced</script >tail",
     "<SCRIPT>upper</SCRIPT>ok",
+    "<script>upper spaced end</SCRIPT >ok",
+    "<Script>mixed</sCrIpT\n>ok",
     "<script>no end tag at all",
+    "<script>unterminated <p>x</p> &amp;",
+    "<p>a</p><style>unterminated style",
     "<script>a</scriptx></script>b",  # near-miss end tag inside cdata
     "<style>.x { color: red }</style>text",
     "<script/>selfclosed is text",
     "<xhtml:script>ns script parsed as normal</xhtml:script>tail",
     "<xhtml:script>outer<script>inner</script>still off</xhtml:script>on",
+    "<x:style/>ns self-closed",
     "&amp; &copy &nbsp; &#x2019; &#65; &bogus; &",
     "& loose amp",
+    "&am<b></b>p;",                   # entity split by a tag stays literal
+    "&#x20<i></i>19; and &#6<b>5;</b>",
+    "&amp<br>; &lt<br>;",
     "<!-- comment <p>inside</p> -->after",
     "<!-- unterminated comment",
+    "<p>x</p><!-- unterminated after text",
     "<!---->tight comment",
+    "<!-->not closed yet-->closed",
+    "<!-- a -- >spaced close",
+    "<!--->dash-->tail",
     "<!DOCTYPE html><p>doc</p>",
     "<!doctype html\nmultiline ><i>x</i>",
+    "<!DOCTYPE html><!-- c --><p>a</p>",
     "<![CDATA[marked section]]>tail",
+    "<p>x</p><![CDATA[late <b>marked</b>]]>tail",
     "<?php echo 1; ?>pi tail",
+    "<?xml version='1.0'?><p>pi first</p>",
     "<? unterminated pi",
     "<!bogus comment>tail",
+    "<!->bogus dash>tail",
     "</>empty end</p>",
     "</ spaced>odd",
+    "</p x=1>end attrs",
     "<1notatag>text",
     "<p attr='<'>lt in value</p>",
     "<div><span>a</span><b>b</b></div>",
     "text<br/>more<hr />even",
+    "<p a=b/>bare slash",
+    "<a href=/x/y?q=1&amp;r=2 rel=nofollow>bare url</a>",
+    "<p a = 'x' b= \"y\" c =z>spaced equals</p>",
+    "<p a==b>double equals</p>",
+    "<p a=b\"c>quote inside bare value</p>",
+    "<p @click=go :href=x>framework attrs</p>",
+    "<o:p></o:p>office ns<svg:rect x=1 />",
+    "<script\x0bsrc=x>hello</script>",  # name is 'script\x0bsrc=x'
+    "<script a=b/>hidden</script>shown",  # bare value 'b/': not self-closed
+    "<style x=y/>gone</style>kept",
+    "<script x />self-closed with attr</script>tail",
+    "<script a=b />shown</script>tail",
+    "<style a=b\x0b/>x</style>y",
+    "<script>a</\u017fcript>b</script>c",  # non-ASCII case variant: no end
+    "<p>1 <2 and 3 < 4</p>",
     "<td>   tabs\tand  spaces  </td>",
     "\n  leading and trailing  \n",
     "<p>&unterminated entity at end &am",
+    "<<p>double lt",
 ]
 
 
 @pytest.mark.parametrize("html", ADVERSARIAL)
 def test_adversarial_byte_identity(html):
-    assert extract_text(html) == _parser_extract(html)
+    _check(html)
+
+
+# A lone '<' (no letter, '/', '!' or '?' after it) is data to the parser;
+# the split leaves it in a data run and stays on the fast path.
+LONE_LT = [
+    "x < 5",
+    "<<p>double lt</p>",
+    "a <= b &amp;< c",
+    "ends with <",
+    "<p>1 <2</p><",
+    "&lt<3 &amp<<b>x</b>",
+]
+
+
+@pytest.mark.parametrize("html", LONE_LT)
+def test_lone_lt_takes_fast_path(html):
+    _check(html, fast_path=True)
+
+
+# Openers with no end: each branch of the split stops at the next '<' or
+# runs to the end of the page once, so these stay linear. The parser
+# itself rescans to the end for every unterminated '<!--', so only the
+# fast path is timed.
+UNTERMINATED = ["<script>", "<style x=1>", "<!--", "<!x", "<?", "<a b", "</x"]
+
+
+@pytest.mark.parametrize("opener", UNTERMINATED)
+def test_many_unterminated_openers_stay_linear(opener):
+    html = "<p>ok</p>" + (opener + " filler text, " * 3) * 4000
+    t0 = time.perf_counter()
+    _fast_extract(html)
+    assert time.perf_counter() - t0 < 0.25, (opener, len(html))
+
+
+def test_fuzz_start_tags_byte_identity():
+    """Random start tags between text, script and style ends: the fast
+    path admits only tags the parser ignores or enters cdata on."""
+    alphabet = ["a", "p", "x", "script", "style", "Script", ":", "-", "=",
+                "'", '"', "/", " ", "\t", "\x0b", "\xa0", "`", "?", "&amp;",
+                "1"]
+    rng = random.Random(20261019)
+    for _ in range(4000):
+        tag = rng.choice(["a", "p", "script", "style", "o:p", "x:script"]) \
+            + "".join(rng.choices(alphabet, k=rng.randint(0, 10)))
+        _check(f"t<{tag}>u</script>v</style>w")
 
 
 def test_fuzz_composed_fragments_byte_identity():
-    import random
-
-    frags = ADVERSARIAL + [
+    frags = ADVERSARIAL + LONE_LT + [
         "<p>", "</p>", "<script>", "</script>", "<style>", "</style>",
-        "&amp;", "&", "<", ">", "--", "-->", "<!--", " ", "\t", "x y z",
-        "<b a=1>", "<xhtml:script>", "</xhtml:script>", "<![", "<!x>",
+        "<SCRIPT >", "</Script\t>", "<script a=b/>", "<br />",
+        "&amp;", "&am", "p;", "&", "<", ">", "--", "-->", "<!--", "-- >",
+        " ", "\t", "\x0b", "x y z", "'", '"', "=", "/",
+        "<b a=1>", "<b a='x'>", '<i c="y z">', "<xhtml:script>",
+        "<a href=/x?y=1>", "<p id=q class='r s'/>", "< ", "<1", "<=",
+        "</xhtml:script>", "<![", "<!x>", "<!DOCTYPE html>", "<?x?>", "<p",
     ]
     rng = random.Random(20260822)
-    for _ in range(400):
+    for _ in range(3000):
         html = "".join(rng.choices(frags, k=rng.randint(1, 12)))
         try:
             want = _parser_extract(html)
@@ -110,3 +242,36 @@ def test_bytes_and_none_paths():
     assert extract_text(b"<p>caf\xc3\xa9</p>") == "café"
     assert extract_text(b"\xff<p>bad utf8</p>") == \
         _parser_extract(b"\xff<p>bad utf8</p>".decode("utf-8", "replace"))
+
+
+def _imported_modules(path: str):
+    pkg = "uckg_spark.oracle"
+    for node in ast.walk(ast.parse(open(path, encoding="utf-8").read())):
+        if isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                parts = pkg.split(".")
+                base = ".".join(parts[: len(parts) - node.level + 1]
+                                + ([base] if base else []))
+            yield base
+            yield from (f"{base}.{a.name}" for a in node.names)
+        elif isinstance(node, ast.Import):
+            yield from (a.name for a in node.names)
+
+
+def test_oracle_takes_nothing_from_kernel_extract():
+    """The oracle extracts with its own golden copy, so a kernel change
+    cannot move both sides of a parity check."""
+    offenders = [
+        f"{os.path.relpath(p, REPO)}: {m}"
+        for p in glob.glob(f"{REPO}/uckg_spark/oracle/*.py")
+        for m in _imported_modules(p)
+        if m == "uckg_spark.kernel.extract"
+        or m.startswith("uckg_spark.kernel.extract.")]
+    assert not offenders, "\n".join(offenders)
+
+
+def test_oracle_extracts_through_golden_copy():
+    from uckg_spark.oracle import kg_oracle
+
+    assert kg_oracle.extract_text is golden.extract_text

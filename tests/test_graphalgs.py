@@ -121,9 +121,8 @@ class TestSnapshotDiff:
 
         cat = GraphCatalog(str(tmp_path / "g"))
         base = _df(spark, [("a", "b"), ("b", "c")])
-        s1 = cat.write_edges(base, n_tasks=2, mode="overwrite")
-        s2 = cat.write_edges(_df(spark, [("c", "d")]), n_tasks=2,
-                             mode="append")
+        s1 = cat.write_edges(base, mode="overwrite")
+        s2 = cat.write_edges(_df(spark, [("c", "d")]), mode="append")
         old = cat.read_edges(spark, snapshot_id=s1)
         new = cat.read_edges(spark, snapshot_id=s2)
         got = {(r["subj"], r["obj"], r["change"])

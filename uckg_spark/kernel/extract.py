@@ -23,17 +23,18 @@ Rules, exactly:
    runs are preserved verbatim, as ``itertext`` preserves them).
 """
 
+
 from __future__ import annotations
 
 import hashlib
 import re
+from html import parser as _hp
 from html import unescape as _unescape
-from html.parser import HTMLParser
 
 _SKIP_TAGS = ("script", "style")
 
 
-class _TextExtractor(HTMLParser):
+class _TextExtractor(_hp.HTMLParser):
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
         self._chunks: list[str] = []
@@ -61,151 +62,120 @@ class _TextExtractor(HTMLParser):
 
 
 # ---------------------------------------------------------------------------
-# Fast scanner path (optimization round 6, guide §4.2 — make the per-task
-# work fast once the job shape is right). ``html.parser`` walks the document
-# with per-tag Python frames (goahead/parse_starttag/updatepos) and was
-# ~75% of the fused extract+scan kernel's CPU. The scanner below replicates
-# the parser's OBSERVABLE semantics for this extractor (character data
-# outside script/style, entity-decoded, concatenated, stripped) using only
-# C-speed str.find/regex work per tag, and FALLS BACK to the real parser
-# for any construct whose handling it cannot prove identical (malformed
-# tags, unterminated comments/PIs, marked sections, quoted '<' in
-# attributes). Equivalence rests on mirroring html.parser 3.x internals:
-# - data runs are rawdata[i : find('<', i)] passed through html.unescape
-#   (goahead's convert_charrefs branch) — the scanner does exactly that;
-# - start-tag extent comes from the parser's own
-#   ``locatestarttagend_tolerant`` + the '>'/'/>' check
-#   (check_for_whole_start_tag); a conservative strict-subset regex must
-#   ALSO match the same extent, which proves the attr loop consumes every
-#   attribute and parse_starttag emits no data;
-# - <script>/<style> enter cdata mode whose end is the parser's own
-#   ``re.compile(r'</\s*%s\s*>' % tag, re.I)`` (set_cdata_mode) — content
-#   contributes nothing to this extractor either way;
-# - end tags use the parser's ``endtagfind`` verbatim; comments use
-#   ``--\s*>``; <!doctype ...> and bogus comments consume to the next '>'
-#   and contribute nothing — all exactly the parser's terminated-case
-#   behavior, with every unterminated/-1 case sent to the fallback.
-# Byte-identity fast-vs-parser is pinned by tests (fixture corpus +
-# adversarial strings).
+# Fast path: split once, verify the markup with one match per page.
+# ``html.parser`` (and a scanner that mirrors it construct by construct)
+# spends a Python step on every tag, ~2800 on a bench page. Here one
+# C-level ``re.split`` cuts the page into data runs and markup, and one
+# more C-level ``fullmatch`` over the page's joined start tags proves that
+# the parser ignores every one of them, so no Python step runs per tag and
+# nothing is kept between pages. The structural-index-first,
+# verify-second split is simdjson's (Langdale & Lemire, VLDB J. 2019).
+# Equivalence with the parser (convert_charrefs=True) rests on:
+# - data: the parser passes rawdata[i : find('<', i)] through
+#   ``html.unescape``; the split's data runs are exactly those runs, so
+#   they are unescaped one by one, never joined first (``&am<b></b>p;``
+#   stays literal). A '<' the split leaves in a data run is a lone '<'
+#   (the parser emits it as data and unescapes the text on each side
+#   apart) when no letter, '/', '!' or '?' follows it; any other '<' there
+#   is a construct the split did not match (marked section, unterminated
+#   tag, declaration or PI): fall back.
+# - start tags: the split takes '<' letter ... up to the first '>'.
+#   ``_PLAIN`` admits a tag only if its quoted values close before that
+#   '>' and every name, separator and bare value stops where the parser's
+#   ``tagfind_tolerant``, ``attrfind_tolerant`` and
+#   ``locatestarttagend_tolerant`` stop, so the parser sees the same
+#   extent, consumes every attribute and meets '>' or '/>': the tag is
+#   ignored unless its local name is script/style, which ``_PLAIN``
+#   excludes. Any other start tag (a namespaced script/style, odd
+#   attribute syntax) sends the page to the parser.
+# - <script>/<style>: an opener matching ``_CDATA_OPEN`` (same grammar,
+#   ending in '>' and not '/>') puts the parser in cdata mode, which ends
+#   at ``</\s*tag\s*>`` (re.I). A non-ASCII case variant of that end tag
+#   fails ``endtagfind`` and the parser keeps scanning, so the split's
+#   ASCII-only end pattern finds the end the parser acts on; with no end
+#   tag the block runs to the end of the page, which the parser drops.
+# - end tags: outside cdata mode the parser consumes '</' up to the first
+#   '>' and emits nothing, whichever of its end-tag, '</>' and bogus
+#   comment cases applies; the skip depth is always 0 outside a block
+#   here, so an end tag changes nothing.
+# - comments end at the first ``--\s*>`` after '<!--' (one with no end
+#   runs to the end of the page and falls back); <!doctype ...>, bogus
+#   comments and PIs end at the first '>': exactly the parser's
+#   terminated cases, none of which emits data.
+# Every branch stops at the next '<' or runs to the end of the page once,
+# so the split is linear whatever the page holds.
 
-_LOCATE_START = re.compile(
-    r"""<[a-zA-Z][^\t\n\r\f />\x00]*      # tag name (html.parser tolerant)
-  (?:[\s/]*
-    (?:(?<=['"\s/])[^\s/>][^\s/=>]*
-      (?:\s*=+\s*
-        (?:'[^']*'
-          |"[^"]*"
-          |(?!['"])[^>\s]*
-         )
-        \s*
-       )?(?:\s|/(?!>))*
-     )*
-   )?
-  \s*
-""",
-    re.VERBOSE,
-)
-# strict subset: simple name, attrs are name or name=value with quote-free
-# values — when THIS matches to the same extent, the parser's attr loop
-# provably consumes everything and end.strip() is '>' or '/>'
-_STRICT_TAG = re.compile(
-    r"<([a-zA-Z][a-zA-Z0-9:._-]*)"
-    r"(?:\s+[a-zA-Z_:][a-zA-Z0-9_:.-]*"
-    r"(?:\s*=\s*(?:'[^'<>]*'|\"[^\"<>]*\"|[^\s<>'\"`=/]+))?)*"
-    r"\s*/?>")
-_ENDTAG = re.compile(r"</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>")
-_COMMENT_CLOSE = re.compile(r"--\s*>")
-_CDATA_CLOSE = {
-    t: re.compile(r"</\s*%s\s*>" % t, re.IGNORECASE)
-    for t in _SKIP_TAGS
-}
+
+def _ci(name: str) -> str:
+    return "".join(f"[{c}{c.upper()}]" for c in name)
+
+
+_ATTRS = (r"(?:[ \t\n\r\f]+[^\s/>'\"=<][^\s/=><'\"]*"
+          r"(?:[ \t\n\r\f]*=[ \t\n\r\f]*"
+          r"(?:'[^'<>]*'|\"[^\"<>]*\"|[^\s<>'\"][^\s<>]*))?)*")
+_PLAIN = (r"(?!(?:[a-zA-Z0-9_.-]*:)*(?:" + _ci("script") + "|"
+          + _ci("style") + r")[ \t\n\r\f/>])"
+          r"[a-zA-Z][a-zA-Z0-9_.-]*(?::[a-zA-Z0-9_.-]*)*"
+          + _ATTRS + r"[ \t\n\r\f]*/?>")
+_PLAIN_TAGS = re.compile(f"(?:{_PLAIN})*")
+_CDATA_OPEN = {name: re.compile(f"(?:{_ci(name)}{_ATTRS}[ \\t\\n\\r\\f]*>)*")
+               for name in _SKIP_TAGS}
+
+
+def _block(name: str) -> str:
+    """A <name ...> opener (the parser's tag name is exactly ``name``,
+    any ASCII case), then everything up to its cdata end tag or the end
+    of the page."""
+    ci = _ci(name)
+    return (rf"({ci}(?![^\t\n\r\f />\x00])[^<>]*>)"
+            rf"(?s:.*?)(?:</\s*{ci}\s*>|\Z)")
+
+
+# one split. Every branch follows one literal '<', which lets the regex
+# engine skip to the next '<' at C speed; the groups (script opener,
+# style opener, start tag, the end of an unterminated comment) capture
+# the markup after that '<'. End tags, declarations and PIs match
+# without a group.
+_MARKUP = re.compile(
+    "<(?:" + _block("script") + "|" + _block("style")
+    + r"|([a-zA-Z][^<>]*>)"
+    r"|/[^<>]*>"
+    r"|!--(?s:.*?)(?:--\s*>|(\Z))"
+    r"|!(?!--|\[)[^<>]*>"
+    r"|\?[^<>]*>)")
+_STRIDE = 5  # a data run, then the four groups of one match
+_NOT_LONE = re.compile(r"<[a-zA-Z/!?]")
 
 _FALLBACK = object()
 
 
+def _joined(parts: list, slot: int) -> str:
+    """The distinct captures of one group, concatenated: each ends at its
+    only '>', so a grammar repeated with ``fullmatch`` checks each one."""
+    distinct = set(parts[slot::_STRIDE])
+    distinct.discard(None)
+    return "".join(distinct)
+
+
 def _fast_extract(html: str):
-    """Scanner twin of ``_TextExtractor``; returns the stripped text or
-    ``_FALLBACK`` when the input needs the real parser."""
-    out: list[str] = []
-    emit = out.append
-    pos = 0
-    n = len(html)
-    depth = 0  # suppression depth for namespaced <xhtml:script>-style tags
-    while pos < n:
-        lt = html.find("<", pos)
-        if lt < 0:
-            if depth == 0 and pos < n:
-                emit(_unescape(html[pos:]))
-            break
-        if depth == 0 and lt > pos:
-            emit(_unescape(html[pos:lt]))
-        nxt = html[lt + 1 : lt + 2]
-        if nxt and (("a" <= nxt <= "z") or ("A" <= nxt <= "Z")):
-            sm = _STRICT_TAG.match(html, lt)
-            if sm is None:
-                return _FALLBACK
-            lm = _LOCATE_START.match(html, lt)
-            j = lm.end()
-            if html.startswith("/>", j):
-                endpos = j + 2
-            elif html.startswith(">", j):
-                endpos = j + 1
-            else:
-                return _FALLBACK
-            if endpos != sm.end():
-                return _FALLBACK
-            # parser: end = rawdata[k:endpos].strip(); within the strict
-            # subset that tail ends '/>' iff the tag text does (the '/'
-            # may have been consumed by locatestarttagend's [\s/]* —
-            # <script/> — so the j-based check alone is wrong)
-            selfclose = html.endswith("/>", lt, endpos)
-            tag = sm.group(1).lower()
-            local = tag.rsplit(":", 1)[-1]
-            pos = endpos
-            if selfclose or local not in _SKIP_TAGS:
-                continue
-            if tag in _CDATA_CLOSE:
-                # real <script>/<style>: parser cdata mode — content is
-                # raw until the parser's own end pattern, or EOF
-                em = _CDATA_CLOSE[tag].search(html, pos)
-                if em is None:
-                    break  # unterminated cdata: parser drops the tail too
-                pos = em.end()
-            else:
-                depth += 1  # namespaced variant: normal scan, suppressed
-        elif nxt == "/":
-            em = _ENDTAG.match(html, lt)
-            if em is None:
-                return _FALLBACK
-            if depth and em.group(1).lower().rsplit(":", 1)[-1] in _SKIP_TAGS:
-                depth -= 1
-            pos = em.end()
-        elif html.startswith("<!--", lt):
-            cm = _COMMENT_CLOSE.search(html, lt + 4)
-            if cm is None:
-                return _FALLBACK
-            pos = cm.end()
-        elif html.startswith("<?", lt):
-            g = html.find(">", lt + 2)
-            if g < 0:
-                return _FALLBACK
-            pos = g + 1
-        elif html.startswith("<!", lt):
-            if html.startswith("<![", lt):
-                return _FALLBACK
-            if html[lt : lt + 9].lower() == "<!doctype":
-                g = html.find(">", lt + 9)
-            else:  # bogus comment: consume to '>'
-                g = html.find(">", lt + 2)
-            if g < 0:
-                return _FALLBACK
-            pos = g + 1
-        else:
-            # lone '<' (not a construct): parser emits it as data
-            if depth == 0:
-                emit("<")
-            pos = lt + 1
-    return "".join(out).strip()
+    """Split-and-verify twin of ``_TextExtractor``; returns the stripped
+    text or ``_FALLBACK`` when the input needs the real parser."""
+    parts = _MARKUP.split(html)
+    if ("" in parts[4::_STRIDE]
+            or _PLAIN_TAGS.fullmatch(_joined(parts, 3)) is None
+            or _CDATA_OPEN["script"].fullmatch(_joined(parts, 1)) is None
+            or _CDATA_OPEN["style"].fullmatch(_joined(parts, 2)) is None):
+        return _FALLBACK  # an unterminated comment, or a tag to verify
+    data = parts[::_STRIDE]
+    text = "".join(data)
+    if "<" in text:
+        if any(_NOT_LONE.search(run) for run in data):
+            return _FALLBACK
+        text = "".join("<".join(map(_unescape, run.split("<")))
+                       for run in data)
+    else:
+        text = "".join(map(_unescape, data))
+    return text.strip()
 
 
 def extract_text(html: bytes | str | None) -> str | None:
@@ -226,6 +196,7 @@ def extract_text(html: bytes | str | None) -> str | None:
     p.feed(html)
     p.close()
     return p.text()
+
 
 
 def xml_clean_text(parts: list[str | None]) -> str | None:

@@ -38,11 +38,11 @@ import json
 
 from ..fixtures import dicts as D
 from ..kernel import templates as T
-from ..kernel.extract import extract_text
 from ..kernel.jsonenc import titles_lang_map_literal
 from ..kernel.linking import build_idf, score_candidates
 from . import detect
 from . import emitters as E
+from .extract import extract_text
 
 
 def _vendor_product_to_cpe(cpe_index: dict[str, dict]) -> dict[str, dict]:

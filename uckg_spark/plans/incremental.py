@@ -69,7 +69,10 @@ def sync_kg(
 ) -> dict:
     """One incremental sync: pages-changelog → mention store → edge
     delta. Returns a summary dict; ``status`` is ``up_to_date`` when the
-    pages head hasn't moved since the last sync (nothing is written)."""
+    pages head hasn't moved since the last sync (nothing is written).
+
+    ``n_tasks`` caps the files of each mention-store write; the edge and
+    node writes size their shuffles from the data (``write_edges``)."""
     head = pages_cat.latest_snapshot(pages_table)
     if head is None:
         raise FileNotFoundError(
@@ -129,7 +132,7 @@ def sync_kg(
         current = None
     if current is None:
         n_add, n_rm = edges.count(), 0
-        graph_cat.write_edges(edges, n_tasks=n_tasks)
+        graph_cat.write_edges(edges)
     else:
         adds = edges.join(current, _EDGE_KEY, "left_anti").persist()
         removes = current.join(edges, _EDGE_KEY, "left_anti").persist()
@@ -137,11 +140,11 @@ def sync_kg(
         if n_rm:
             graph_cat.delete_rows("edges", removes, _EDGE_KEY)
         if n_add:
-            graph_cat.write_edges(adds, n_tasks=n_tasks, mode="append")
+            graph_cat.write_edges(adds, mode="append")
         for df in (adds, removes, current):
             df.unpersist()
 
-    graph_cat.write_nodes(nodes, n_buckets=n_tasks)
+    graph_cat.write_nodes(nodes)
 
     triples.unpersist()
     m.unpersist()

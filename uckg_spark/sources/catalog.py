@@ -52,8 +52,13 @@ Layout choices for the KG access paths:
 - ``edges`` partitioned by ``pred`` — predicate-sliced scans (the dominant
   access: "all hasVulnerability edges") prune at the directory level;
   within a partition, files are sorted by subj for locality.
-- ``nodes`` bucketed-by-hash(uri) layout via repartition(uri) so node
-  lookups and node-edge joins co-locate.
+- ``nodes`` files sorted by uri.
+- Both writes are one shuffle that AQE sizes from the data (a
+  ``rebalance`` hint): a small graph coalesces to a few files, and a
+  partition past the advisory size splits, so a hot predicate still
+  spreads over several writers. Partitioning pays only once the data
+  needs it (*To Partition, or Not to Partition*, SIGMOD 2021); a fixed
+  32-way write of a ~1000-edge graph made ~150 files.
 """
 
 from __future__ import annotations
@@ -835,16 +840,17 @@ class GraphCatalog:
             return empty_frame()
         return _apply_equality_deletes(spark, data, self.root, deletes)
 
-    def write_edges(self, edges: DataFrame, n_tasks: int = 32,
-                    mode: str = "overwrite",
+    def write_edges(self, edges: DataFrame, mode: str = "overwrite",
                     props: dict | None = None) -> str:
         """Edges partitioned by pred for directory-pruned scans.
 
-        Shuffle on (pred, subj) across ``n_tasks`` — NOT ``repartition("pred")``,
-        which maps each predicate to exactly one task: a hot predicate (every
-        CVE mention emits ucohasCVE_ID) would serialize behind a single
-        writer at scale. With (pred, subj) a hot pred spreads over many
-        tasks, each writing its own file into that pred's directory.
+        One shuffle on (pred, subj), sized by AQE from the data (the
+        ``rebalance`` hint) rather than a fixed task count: a small graph
+        coalesces into one task, which writes one file per predicate,
+        and a partition past the advisory size is split. Hashing on
+        (pred, subj), not pred alone, is what lets a hot predicate (every
+        CVE mention emits ucohasCVE_ID) spread over several writers, each
+        writing its own file into that pred's directory.
         Row count for the manifest is observed during the write (no second
         scan of the output)."""
         from pyspark.sql import Observation
@@ -853,7 +859,7 @@ class GraphCatalog:
             obs = Observation(f"edges_{uuid.uuid4().hex[:8]}")
             (
                 edges.observe(obs, F.count(F.lit(1)).alias("n"))
-                .repartition(n_tasks, "pred", "subj")
+                .hint("rebalance", "pred", "subj")
                 .sortWithinPartitions("pred", "subj", "obj")
                 .write.mode("overwrite")
                 .partitionBy("pred")
@@ -863,16 +869,17 @@ class GraphCatalog:
 
         return self._write_snapshot("edges", write, mode, props=props)
 
-    def write_nodes(self, nodes: DataFrame, n_buckets: int = 16,
-                    mode: str = "overwrite",
+    def write_nodes(self, nodes: DataFrame, mode: str = "overwrite",
                     props: dict | None = None) -> str:
+        """Nodes sorted by uri, after one shuffle on uri that AQE sizes
+        from the data (the ``rebalance`` hint, as in ``write_edges``)."""
         from pyspark.sql import Observation
 
         def write(path: str) -> int:
             obs = Observation(f"nodes_{uuid.uuid4().hex[:8]}")
             (
                 nodes.observe(obs, F.count(F.lit(1)).alias("n"))
-                .repartition(n_buckets, "uri")
+                .hint("rebalance", "uri")
                 .sortWithinPartitions("uri")
                 .write.mode("overwrite")
                 .parquet(path)
@@ -1109,7 +1116,7 @@ class GraphCatalog:
 
     # ---- maintenance ---------------------------------------------------
 
-    def compact_edges(self, spark: SparkSession, n_tasks: int = 32) -> str:
+    def compact_edges(self, spark: SparkSession) -> str:
         """Iceberg's ``rewrite_data_files`` analog: rewrite the edge
         table's current head — which after N appends spans N snapshot
         dirs, each with its own small files — as ONE fresh snapshot dir,
@@ -1129,8 +1136,7 @@ class GraphCatalog:
         if len(parent["dirs"]) == 1 and not _deletes_of(parent):
             return parent["snapshot_id"]
         return self.write_edges(
-            self.read_edges(spark), n_tasks=n_tasks, mode="overwrite",
-            props={"replace": True})
+            self.read_edges(spark), mode="overwrite", props={"replace": True})
 
     def compact_table(self, spark: SparkSession, name: str,
                       n_tasks: int = 8) -> str:
