@@ -5,7 +5,6 @@ the reimplemented-RML-mapper correctness surface (SURVEY.md §5.2)."""
 from uckg_spark.fixtures import dicts as D
 from uckg_spark.oracle import emitters as E
 from uckg_spark.plans import triples as PT
-from uckg_spark.sources import dims
 
 
 def _gold():
@@ -24,15 +23,11 @@ def _gold():
     )
 
 
-def test_full_dictionary_batch_parity(spark):
+def test_full_dictionary_batch_parity(kg_dims):
     gold = {tuple(t) for t in _gold()}
     got_df = PT.emit_all_dictionary_batches(
-        dims.dim_cve(spark),
-        dims.dim_cwe(spark),
-        dims.dim_cpe(spark),
-        *dims.dim_attack(spark),
-        dims.dim_capec(spark),
-        dims.dim_d3fend(spark),
+        kg_dims.cve, kg_dims.cwe, kg_dims.cpe, kg_dims.attack_ents,
+        kg_dims.attack_rels, kg_dims.capec, kg_dims.d3fend,
     )
     got = {tuple(r) for r in got_df.collect()}
     assert got == gold

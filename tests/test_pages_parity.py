@@ -107,3 +107,37 @@ def test_duplicate_pages_idempotent(spark, fixture_pages, kg_dims):
     a = {tuple(r) for r in build_triples(spark, pdf, kg_dims).collect()}
     b = {tuple(r) for r in build_triples(spark, doubled, kg_dims).collect()}
     assert a == b
+
+
+def test_nodes_keep_label_and_prop_semantics(spark):
+    """materialize_graph's nodes equal the oracle graph's on the corner
+    cases of its two groupings: a literal rdf:type triple (a label AND a
+    prop), uris with only labels or only props, multi-valued props, and a
+    uri with only URI edges (no node)."""
+    import uckg_spark.kernel.templates as T
+    from uckg_spark.oracle.emitters import Triple
+    from uckg_spark.oracle.kg_oracle import frame_graph, oracle_graph
+    from uckg_spark.plans.triples import TRIPLE_COLS
+
+    S, RDF = T.XSD_STRING, T.RDF_TYPE
+    rows = [
+        Triple("u:a", RDF, "c:A", False, None),
+        Triple("u:a", RDF, "c:B", False, None),
+        Triple("u:a", "p:name", "a2", True, S),
+        Triple("u:a", "p:name", "a1", True, S),
+        Triple("u:a", "p:note", "n", True, S),
+        Triple("u:a", "p:link", "u:b", False, None),
+        Triple("u:b", RDF, "c:A", False, None),
+        Triple("u:c", "p:name", "c", True, S),
+        Triple("u:d", RDF, "lit-type", True, S),
+        Triple("u:d", RDF, "c:D", False, None),
+        Triple("u:d", "p:name", "d", True, S),
+        Triple("u:e", RDF, "only-literal-type", True, S),
+        Triple("u:f", "p:link", "u:a", False, None),
+    ]
+    df = spark.createDataFrame(
+        rows, "subj string, pred string, obj string, obj_is_literal boolean,"
+              " obj_datatype string").select(*TRIPLE_COLS)
+    nodes, edges = materialize_graph(df)
+    assert frame_graph(nodes, edges) == oracle_graph(rows)
+    assert nodes.count() == 5  # u:f has only a URI edge

@@ -98,8 +98,8 @@ class _TextExtractor(_hp.HTMLParser):
 #   '>' and emits nothing, whichever of its end-tag, '</>' and bogus
 #   comment cases applies; the skip depth is always 0 outside a block
 #   here, so an end tag changes nothing.
-# - comments end at the first ``--\s*>`` after '<!--' (one with no end
-#   runs to the end of the page and falls back); <!doctype ...>, bogus
+# - comments end at the first ``--\s*>`` after '<!--' (from one with no
+#   end the page is a tail, which ``_TAIL`` splits); <!doctype ...>, bogus
 #   comments and PIs end at the first '>': exactly the parser's
 #   terminated cases, none of which emits data.
 # Every branch stops at the next '<' or runs to the end of the page once,
@@ -131,18 +131,31 @@ def _block(name: str) -> str:
             rf"(?s:.*?)(?:</\s*{ci}\s*>|\Z)")
 
 
-# one split. Every branch follows one literal '<', which lets the regex
-# engine skip to the next '<' at C speed; the groups (script opener,
-# style opener, start tag, the end of an unterminated comment) capture
-# the markup after that '<'. End tags, declarations and PIs match
-# without a group.
-_MARKUP = re.compile(
-    "<(?:" + _block("script") + "|" + _block("style")
-    + r"|([a-zA-Z][^<>]*>)"
-    r"|/[^<>]*>"
-    r"|!--(?s:.*?)(?:--\s*>|(\Z))"
-    r"|!(?!--|\[)[^<>]*>"
-    r"|\?[^<>]*>)")
+def _split_re(comment: str) -> re.Pattern:
+    """The page split, with ``comment`` as its '<!--' branch. Every branch
+    follows one literal '<', which lets the regex engine skip to the next
+    '<' at C speed; the groups (script opener, style opener, start tag,
+    the comment group) capture the markup after that '<'. End tags,
+    declarations and PIs match without a group."""
+    return re.compile(
+        "<(?:" + _block("script") + "|" + _block("style")
+        + r"|([a-zA-Z][^<>]*>)"
+        r"|/[^<>]*>"
+        r"|" + comment
+        + r"|!(?!--|\[)[^<>]*>"
+        r"|\?[^<>]*>)")
+
+
+# a comment ends at the first '--\s*>'; one with no end captures the rest
+# of the page, which is then the tail below
+_MARKUP = _split_re(r"!--(?:(?s:.*?)--\s*>|((?s:.*)))")
+# After an unterminated comment at i no later '<!--' can close (its end
+# would close the first one too), so the parser's goahead(end=True) meets
+# each as unterminated: it emits unescape(rawdata[i:k]) as data, k past
+# the next '>' after i+1, else at the next '<', else i+1, and goes on at
+# k. The tail split captures that data up to the next '>' without
+# rescanning for '-->'; an opener with no '>' left falls back.
+_TAIL = _split_re(r"(!--[^>]*>)")
 _STRIDE = 5  # a data run, then the four groups of one match
 _NOT_LONE = re.compile(r"<[a-zA-Z/!?]")
 
@@ -157,24 +170,52 @@ def _joined(parts: list, slot: int) -> str:
     return "".join(distinct)
 
 
+def _verified_runs(parts: list):
+    """The unescaped data runs of one split, or ``_FALLBACK`` when a tag
+    or a '<' left in a data run needs the parser."""
+    if (_PLAIN_TAGS.fullmatch(_joined(parts, 3)) is None
+            or _CDATA_OPEN["script"].fullmatch(_joined(parts, 1)) is None
+            or _CDATA_OPEN["style"].fullmatch(_joined(parts, 2)) is None):
+        return _FALLBACK
+    data = parts[::_STRIDE]
+    if "<" not in "".join(data):
+        return list(map(_unescape, data))
+    if any(_NOT_LONE.search(run) for run in data):
+        return _FALLBACK
+    return ["<".join(map(_unescape, run.split("<"))) for run in data]
+
+
+def _tail_text(tail: str):
+    """The text of ``tail``, which starts at the page's first
+    unterminated '<!--', as goahead(end=True) emits it."""
+    if tail.find("<!--", tail.rfind(">") + 1) >= 0:
+        return _FALLBACK  # an opener with no '>' after it
+    k = tail.index(">") + 1
+    parts = _TAIL.split(tail[k:])
+    runs = _verified_runs(parts)
+    if runs is _FALLBACK:
+        return _FALLBACK
+    pieces = [_unescape("<" + p) if p else "" for p in parts[4::_STRIDE]]
+    return _unescape(tail[:k]) + "".join(
+        r + p for r, p in zip(runs, pieces + [""]))
+
+
 def _fast_extract(html: str):
     """Split-and-verify twin of ``_TextExtractor``; returns the stripped
     text or ``_FALLBACK`` when the input needs the real parser."""
     parts = _MARKUP.split(html)
-    if ("" in parts[4::_STRIDE]
-            or _PLAIN_TAGS.fullmatch(_joined(parts, 3)) is None
-            or _CDATA_OPEN["script"].fullmatch(_joined(parts, 1)) is None
-            or _CDATA_OPEN["style"].fullmatch(_joined(parts, 2)) is None):
-        return _FALLBACK  # an unterminated comment, or a tag to verify
-    data = parts[::_STRIDE]
-    text = "".join(data)
-    if "<" in text:
-        if any(_NOT_LONE.search(run) for run in data):
+    rest = parts[-2] if len(parts) > 1 else None
+    if rest is not None:  # the last match is an unterminated comment
+        parts = parts[:-_STRIDE]
+    runs = _verified_runs(parts)
+    if runs is _FALLBACK:
+        return _FALLBACK
+    text = "".join(runs)
+    if rest is not None:
+        tail = _tail_text("<!--" + rest)
+        if tail is _FALLBACK:
             return _FALLBACK
-        text = "".join("<".join(map(_unescape, run.split("<")))
-                       for run in data)
-    else:
-        text = "".join(map(_unescape, data))
+        text += tail
     return text.strip()
 
 

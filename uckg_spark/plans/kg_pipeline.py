@@ -18,6 +18,8 @@ Scale design (10^12 docs, BASELINE.json north_rule):
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -32,19 +34,23 @@ P_EXPLOITS = T.UCO_BARE + "ucoexploitsVulnerability"  # decl uco2.ttl:45
 class KgDims:
     """All dimension DataFrames + alias rows, built once per job. Each dim
     is a driver-held local relation (``sources/dims.py``): no job builds
-    it and nothing needs materializing before it is broadcast."""
+    it and nothing needs materializing before it is broadcast.
+    ``tables`` keeps the Arrow tables the frames were made from, so the
+    record batches can take their rows on the driver."""
 
     def __init__(self, spark: SparkSession):
         from ..fixtures import dicts as D
         from ..sources import dims as S
 
-        self.cve = S.dim_cve(spark)
-        self.cwe = S.dim_cwe(spark)
-        self.cpe = S.dim_cpe(spark)
-        self.cpe_vp = S.dim_cpe_by_vendor_product(spark)
-        self.attack_ents, self.attack_rels = S.dim_attack(spark)
-        self.capec = S.dim_capec(spark)
-        self.d3fend = S.dim_d3fend(spark)
+        self.tables = S.dim_tables()
+        t = {k: S.local_df(spark, k, v) for k, v in self.tables.items()}
+        self.cve = t["cve"]
+        self.cwe = t["cwe"]
+        self.cpe = t["cpe"]
+        self.cpe_vp = t["cpe_vp"]
+        self.attack_ents, self.attack_rels = t["attack_ents"], t["attack_rels"]
+        self.capec = t["capec"]
+        self.d3fend = t["d3fend"]
         self.alias_rows = D.alias_table()
 
 
@@ -55,16 +61,20 @@ class MentionTables(dict):
     background thread: callers MUST invoke :meth:`join_barrier` before
     triggering any downstream action (``build_triples`` does). The method
     is explicit and idempotent — it joins the scan thread, re-raises any
-    scan error, and materializes the per-kind caches; a second call is a
-    no-op. (Replaces a magic ``"_barrier"`` dict key that callers could
-    silently forget, swallowing scan errors.)"""
+    scan error, and materializes the per-kind caches; a second call runs
+    only ``alongside``. (Replaces a magic ``"_barrier"`` dict key that
+    callers could silently forget, swallowing scan errors.)"""
 
     _barrier_fn = None
 
-    def join_barrier(self) -> None:
+    def join_barrier(self, alongside=None):
+        """Join the scan, then fill the per-kind caches. ``alongside``, a
+        callable, runs on this thread while they fill (after the scan, so
+        it may run jobs on the mention cache); its result is returned."""
         fn, self._barrier_fn = self._barrier_fn, None
         if fn is not None:
-            fn()
+            return fn(alongside)
+        return alongside() if alongside is not None else None
 
     def unpersist(self) -> None:
         """Release the cached mention stream and per-kind tables (a no-op
@@ -72,6 +82,32 @@ class MentionTables(dict):
         accumulates cache blocks otherwise."""
         for df in self.values():
             df.unpersist()
+
+
+def _in_background(fn):
+    """Start ``fn`` on a daemon thread that inherits the caller's job
+    group and description (PySpark's pinned threads need
+    ``InheritableThread`` for that); the returned call joins it and
+    re-raises what it raised."""
+    from pyspark import InheritableThread
+
+    err: list[BaseException] = []
+
+    def run():
+        try:
+            fn()
+        except BaseException as e:  # re-raised at the join
+            err.append(e)
+
+    t = InheritableThread(run, daemon=True)
+    t.start()
+
+    def join():
+        t.join()
+        if err:
+            raise err[0]
+
+    return join
 
 
 def linked_mentions(
@@ -89,15 +125,17 @@ def linked_mentions(
     scan is the corpus-sized cost, the linking is mention-sized.
 
     SHUFFLE BUDGET: the mention stream is persisted once; every per-kind
-    table below is a narrow filter + broadcast join (zero exchanges). The
-    co-mention pair joins in build_triples shuffle on url — and are LEFT TO
-    AQE on purpose: at small scale AQE converts them to broadcast joins and
-    coalesces the tiny post-shuffle partitions; at web scale it splits
-    skewed url partitions. A static repartition(url) here (measured) pins
-    the plan to fixed-width sort-merge joins and forfeits both adaptations.
-    Mention rows are deliberately NOT deduplicated (a page may mention the
-    same id twice): every consumer is a semi join, a pair-distinct, or the
-    global A1 dedup — re-deduplicating here would be a wasted shuffle.
+    table below is a narrow filter plus, for the dictionary-checked kinds,
+    a broadcast join against a local relation: no shuffle of the mention
+    stream. The co-mention pair joins in build_triples shuffle on url — and
+    are LEFT TO AQE on purpose: at small scale AQE converts them to
+    broadcast joins and coalesces the tiny post-shuffle partitions; at web
+    scale it splits skewed url partitions. A static repartition(url) here
+    (measured) pins the plan to fixed-width sort-merge joins and forfeits
+    both adaptations. Mention rows are deliberately NOT deduplicated (a
+    page may mention the same id twice): every consumer is a pair-distinct,
+    a dropDuplicates, the dictionary key distinct or the global A1 dedup —
+    re-deduplicating here would be a wasted shuffle.
 
     The per-kind tables are plain ``persist()``-ed. (A localCheckpoint
     variant was measured and REJECTED: under AQE, ``Dataset.checkpoint``
@@ -114,6 +152,16 @@ def linked_mentions(
     if mention_partitions:
         mentions = mentions.repartition(mention_partitions)
     mentions = mentions.persist()
+    # With defer_barrier=True the scan starts here, before any per-kind
+    # plan is built (driver time that would delay it), and runs in a
+    # background thread behind MentionTables.join_barrier(): the caller
+    # constructs its (py4j-round-trip-heavy) downstream plan WHILE
+    # executors run the scan, and joins the barrier before triggering any
+    # action. That driver time is core-count-independent, so hiding it
+    # behind the scan buys wall time at every cluster size. Only the plain
+    # count runs concurrently with plan construction (low driver
+    # involvement); the Catalyst-heavy cache queries run after it.
+    join_scan = _in_background(mentions.count) if defer_barrier else None
 
     m_cve = mentions.filter(F.col("kind") == "cve").select(
         "url", F.col("canonical_id").alias("cve")
@@ -215,12 +263,13 @@ def linked_mentions(
         "d3fend": m_d3fend,
         "cpe": m_cpe,
     })
-    # each per-kind table feeds 2-5 emission branches; persisting them (they
-    # are mention-sized, tiny relative to pages) lets every branch read a
-    # materialized cache instead of re-driving its own broadcast exchange.
-    # attack/d3fend are NOT persisted: build_triples gates those record
-    # batches on the shared mention-id distinct instead (the tables remain
-    # constructible for direct callers, just lazy).
+    # the co-mention families and the R1/R4 emissions read these four
+    # per-kind tables; persisting them (they are mention-sized, tiny
+    # relative to pages) lets every branch read a materialized cache
+    # instead of re-driving its own broadcast exchange. attack/d3fend are
+    # NOT persisted: build_triples takes those record batches from the
+    # driver-held dims (the tables remain constructible for direct
+    # callers, just lazy).
     kinds = ("cve", "cwe", "capec", "cpe")
     # per-kind tables are each a ~1/6 filter of the mention stream; caching
     # them at the full mention partition count makes EVERY downstream probe
@@ -233,46 +282,36 @@ def linked_mentions(
         out[k] = (out[k].coalesce(kp) if kp else out[k]).persist()
 
     # Materialize the mention cache AND the per-kind caches BEFORE any
-    # downstream action. Downstream, AQE materializes the R7/R8 broadcast
-    # query stages CONCURRENTLY and independently; if a cache is still lazy
-    # at that point, each racing stage recomputes the full extract+scan
-    # kernel for partitions whose cache block isn't populated yet —
-    # measured as a ~2× wall regression at 8 cores (and worse with more
-    # cores: more concurrent stages, more duplicated scans).
-    #
-    # With defer_barrier=True the materializing runs in a background
-    # thread behind MentionTables.join_barrier(): the caller
-    # constructs its (large, py4j-round-trip-heavy — measured ~4.5 s of
-    # driver-serial time) downstream plan WHILE executors run the scan,
-    # and joins the barrier before triggering any action. That driver
-    # time is core-count-independent, so hiding it behind the scan buys
-    # wall time at every cluster size and strong-scaling efficiency.
-    import threading
+    # downstream action. Downstream, AQE materializes query stages
+    # CONCURRENTLY and independently; if a cache is still lazy at that
+    # point, each racing stage recomputes the full extract+scan kernel for
+    # partitions whose cache block isn't populated yet — measured as a ~2×
+    # wall regression at 8 cores (and worse with more cores: more
+    # concurrent stages, more duplicated scans).
 
-    def _store_kinds():
-        """Materialize the per-kind caches, all kinds in parallel
-        (independent reads of the mention cache — concurrent Spark jobs).
-        Serial, these 6 queries cost ~7 s at bench scale; in parallel ~2 s.
-        Must run AFTER the mention cache is populated (racing the scan
-        would duplicate the extract+scan kernel per racing stage)."""
+    def _store_kinds(alongside=None):
+        """Materialize the per-kind caches, all four kinds in parallel
+        (independent reads of the mention cache, so concurrent Spark jobs
+        instead of four latencies in a row), and run ``alongside`` on this
+        thread meanwhile. Must run AFTER the mention cache is populated
+        (racing the scan would duplicate the extract+scan kernel per
+        racing stage)."""
+        joins = [_in_background(out[k].count) for k in kinds]
         errs: list[BaseException] = []
-
-        def _one(k):
+        result = None
+        try:
+            result = alongside() if alongside is not None else None
+        except BaseException as e:
+            errs.append(e)
+        for join in joins:
             try:
-                out[k].count()  # populates this kind's cache blocks
+                join()
             except BaseException as e:
                 errs.append(e)
-
-        ts = [threading.Thread(target=_one, args=(k,), daemon=True)
-              for k in kinds]
-        for t in ts:
-            t.start()
-        for t in ts:
-            t.join()
         if errs:
-            # surface EVERY failed kind, not just the first: concurrent
-            # failures can have different root causes and hiding five of
-            # six masks the real one
+            # surface EVERY failure, not just the first: concurrent
+            # failures can have different root causes and hiding the
+            # others masks the real one
             primary = errs[0]
             for extra in errs[1:]:
                 primary.add_note(
@@ -280,30 +319,12 @@ def linked_mentions(
                     f"{type(extra).__name__}: {extra}"
                 )
             raise primary
+        return result
 
     if defer_barrier:
-        err: list[BaseException] = []
-
-        def _scan():
-            try:
-                mentions.count()
-            except BaseException as e:  # re-raised at the barrier
-                err.append(e)
-
-        t = threading.Thread(target=_scan, daemon=True)
-        t.start()
-
-        def barrier():
-            # join the scan first: only the plain count runs concurrently
-            # with the caller's py4j-heavy plan construction (low driver
-            # involvement); the Catalyst-heavy checkpoint queries run only
-            # after construction is done, avoiding driver-lock contention
-            # (measured: running them inside this background thread cost
-            # ~20 s extra wall at local[32]).
-            t.join()
-            if err:
-                raise err[0]
-            _store_kinds()
+        def barrier(alongside):
+            join_scan()
+            return _store_kinds(alongside)
 
         out._barrier_fn = barrier
     else:
@@ -312,15 +333,105 @@ def linked_mentions(
     return out
 
 
+def _dictionary_keys(spark: SparkSession, dims: KgDims,
+                     mentions: DataFrame) -> dict[str, set[str]]:
+    """The distinct (kind, canonical_id) of the mention stream that name a
+    dictionary row, collected: a semi join against a local relation of
+    the dims' keys, then one distinct. Its size is bounded by the
+    dictionaries whatever the corpus (a CVE-shaped id the dictionary
+    lacks matches nothing)."""
+    t = dims.tables
+    cols = [("cve", t["cve"]["id"], ""), ("cwe", t["cwe"]["id_value"], ""),
+            ("capec", t["capec"]["ID"], "CAPEC-"),
+            ("attack", t["attack_ents"]["ID"], ""),
+            ("d3fend", t["d3fend"]["d3fend_id"], "")]
+    pairs = [(kind, prefix + v) for kind, col, prefix in cols
+             for v in col.to_pylist() if v is not None]
+    keys = spark.createDataFrame(
+        pa.table({"kind": [k for k, _ in pairs],
+                  "canonical_id": [v for _, v in pairs]}),
+        "kind string, canonical_id string")
+    rows = (mentions.select("kind", "canonical_id")
+            .join(F.broadcast(keys), ["kind", "canonical_id"], "leftsemi")
+            .distinct()
+            .collect())
+    out: dict[str, set[str]] = {kind: set() for kind, _, _ in cols}
+    for kind, cid in rows:
+        out[kind].add(cid)
+    return out
+
+
+def _dictionary_records(spark: SparkSession, dims: KgDims,
+                        keys: dict[str, set[str]]) -> DataFrame:
+    """R2, R5, R6, R7 and R8: every dictionary record batch, from the
+    driver-held dims filtered by the mentioned keys. Nothing here reads
+    the mention cache, and the union runs as one partition: its rows are
+    bounded by the dictionaries."""
+    from ..sources import dims as S
+
+    t = dims.tables
+
+    def rows(table: pa.Table, hit) -> pa.Table:
+        # take, not filter: a filter that keeps nothing returns columns
+        # with no chunks, which createDataFrame rejects
+        return table.take(pc.indices_nonzero(hit))
+
+    def take(name: str, col: str, ids) -> DataFrame:
+        table = t[name]
+        hit = pc.is_in(table[col], value_set=pa.array(sorted(ids), pa.string()))
+        return S.local_df(spark, name, rows(table, hit))
+
+    # R2 — full CVE records for mentioned, in-dictionary CVEs
+    records, cwe_pairs, cpe_pairs = PT.build_cve_stage(
+        take("cve", "id", keys["cve"]), dims.cwe, dims.cpe)
+    parts = [PT.emit_cve_batch(records, cwe_pairs, cpe_pairs)]
+    # R5 — full CWE records for mentioned CWEs
+    parts.append(PT.emit_cwe_batch(take("cwe", "id_value", keys["cwe"])))
+    # R6 — CAPEC records (canonical_id is "CAPEC-<n>"; the dictionary keys
+    # on the bare number)
+    parts.append(PT.emit_capec_batch(take(
+        "capec", "ID", {k.removeprefix("CAPEC-") for k in keys["capec"]})))
+
+    # R7 — ATT&CK: all 7 typed relationship edges with a mentioned SOURCE
+    # OR TARGET, plus entity records for every mentioned id and for both
+    # endpoints of each valid edge. The endpoint closure applies the
+    # checks of PT.valid_attack_rels (P3 source present, P5 type pair in
+    # the catalog as concat_ws('|') keys it, J4 target in the dictionary)
+    # to the gated rows on the driver.
+    mentioned = keys["attack"]
+    rels = t["attack_rels"]
+    vs = pa.array(sorted(mentioned), pa.string())
+    gated = rows(rels, pc.or_(pc.is_in(rels["source_id"], value_set=vs),
+                              pc.is_in(rels["target_id"], value_set=vs)))
+    gated_df = S.local_df(spark, "attack_rels", gated)
+    parts.append(PT.emit_attack_relationships(dims.attack_ents, gated_df))
+    ent_all = set(t["attack_ents"]["ID"].to_pylist())
+    type_pairs = {f"{st}|{tt}" for st, tt in T.ATTACK_REL_CATALOG}
+    ent_ids = set(mentioned)
+    for src, st, tgt, tt in zip(*(gated[c].to_pylist()
+                                   for c in S.ATTACK_REL_SCHEMA.names)):
+        pair = "|".join(x for x in (st, tt) if x is not None)
+        if src is not None and pair in type_pairs and tgt in ent_all:
+            ent_ids |= {src, tgt}
+    parts.append(PT.emit_attack_entities(take("attack_ents", "ID", ent_ids)))
+
+    # R8 — D3FEND record batch for mentioned, in-dictionary d3fend ids
+    # (incl. the _ID stray-quote typo: no _ID triples, d3fend_rml.ttl:29).
+    # Mentions carry the d3fend_id column's value.
+    parts.append(PT.emit_d3fend_batch(
+        take("d3fend", "d3fend_id", keys["d3fend"])))
+    return PT._union(parts).coalesce(1)
+
+
 def build_triples(
     spark: SparkSession, pages: DataFrame, dims: KgDims,
     mention_partitions: int | None = None,
-    mentions: dict[str, DataFrame] | None = None,
+    mentions: MentionTables | None = None,
 ) -> DataFrame:
     """Stages 4–6: co-mention edges + entity records → repaired, deduped
     triple set (the oracle-parity surface).
 
-    ``mentions``: pass the dict from a prior ``linked_mentions`` call to
+    ``mentions``: pass the tables from a prior ``linked_mentions`` call to
     reuse its persisted stage (a fresh call would build new UDF plans that
     miss Spark's cache-by-plan matching and re-run the whole scan)."""
     m = mentions or linked_mentions(
@@ -330,47 +441,17 @@ def build_triples(
         m["cve"], m["cwe"], m["capec"], m["cpe"],
     )
 
-    # STAGE-DEPTH BUDGET (the round-3 AQE-latency thread): at small scale
-    # AQE materializes each upstream shuffle/broadcast query stage in
-    # sequence, so the emission DAG's wall tracks its STAGE COUNT, not its
-    # row count. Round 3 paid one distinct shuffle per dictionary gate
-    # (4×), one url-join + distinct per co-mention family (3×), and two
-    # ATT&CK entity emits with separate distincts — ~15 stages. This shape
-    # fuses them: ONE shared (kind, id) distinct feeds every dictionary
-    # gate (identical subplans → Catalyst/AQE exchange reuse computes the
-    # shuffle once), ONE url join + ONE distinct serves all three
-    # co-mention families (per-kind CASE element arrays, single explode),
-    # and ONE union-distinct serves both ATT&CK entity id sets. The triple
-    # SET is unchanged (parity tests assert set equality).
-
-    # shared distinct mention-id table. Ids here are NOT yet
-    # dictionary-validated (the per-kind tables are) — every consumer is a
-    # semi join against the dictionary, where invalid ids simply match
-    # nothing, so validation is free and the distinct count stays bounded
-    # by |dictionary| + |regex-shaped tokens in corpus| per kind.
-    mid = m["mentions"].select("kind", "canonical_id").distinct()
-    # ONE shared broadcast for every dictionary gate: each gate used to
-    # broadcast its own per-kind projection of mid (4-5 separate broadcast
-    # exchanges = 4-5 extra AQE stages). Folding the kind into a composite
-    # equi-key — concat('<kind>:', dict_col) == concat(kind, ':',
-    # canonical_id) — keeps the condition two-sided, so the optimizer
-    # cannot push a kind filter into the build side, every consumer
-    # broadcasts the IDENTICAL plan, and Catalyst/AQE reuse a single
-    # exchange. ':' cannot appear inside a kind name, so the composite
-    # key is unambiguous. Semantics per gate are unchanged (semi join on
-    # the same (kind, id) match set).
-    mid_b = F.broadcast(mid.select(
-        F.concat(F.col("kind"), F.lit(":"), F.col("canonical_id"))
-        .alias("_mid_key")))
-
-    def gate(dim: DataFrame, kind: str, col_expr) -> DataFrame:
-        """dim rows whose (kind, id) was mentioned — one reused broadcast."""
-        return dim.join(
-            mid_b,
-            F.concat(F.lit(kind + ":"), col_expr) == F.col("_mid_key"),
-            "leftsemi",
-        )
-
+    # TWO HALVES. The mention half (R1, the co-mention edges of R3/R4/R6,
+    # the R4 records) reads the per-kind caches, and its plan is built
+    # here while the scan runs. The record half (R2, R5–R8) is bounded by
+    # the dictionaries: at the barrier one job collects the mentioned
+    # dictionary keys (_dictionary_keys), and every record batch is then
+    # taken from the driver-held dims, so none of them re-reads the
+    # mention cache. Sharing one (kind, id) distinct across the gates as
+    # identical subplans does NOT make AQE compute it once on Spark 4.1:
+    # exchange reuse never fired for an exchange over a persisted frame
+    # (BENCH.md), so each gate re-ran the shuffle and its broadcast. The
+    # triple SET is unchanged (parity tests assert set equality).
     sq = PT.sq
     vuln = f"concat({sq(T.UCO_HASH + 'VULN-')}, `cve`)"
     cve_uri = f"concat({sq(T.UCO_HASH)}, `cve`)"
@@ -382,19 +463,6 @@ def build_triples(
         PT.type_el(cve_uri, T.CL_CVE),
         PT.uri_el(vuln, T.P_HAS_CVE_ID, cve_uri),
     ]))
-
-    # R2 — full CVE records for mentioned, in-dictionary CVEs
-    # (semi joins dedup inherently — no distinct on the mention side;
-    # the CVE gate stays a JOIN, not a broadcast id set: CVE ids are
-    # regex-canonical, not dictionary-validated, so their distinct count
-    # is corpus-driven.)
-    mentioned_cve_dim = dims.cve.join(
-        m_cve.select(F.col("cve").alias("id")), "id", "leftsemi"
-    )
-    records, cwe_pairs, cpe_pairs = PT.build_cve_stage(
-        mentioned_cve_dim, dims.cwe, dims.cpe
-    )
-    parts.append(PT.emit_cve_batch(records, cwe_pairs, cpe_pairs))
 
     # R3 + R4 edges + R6 edges — the three co-mention families share ONE
     # url join + ONE distinct (round 3 ran each as its own join+distinct
@@ -440,59 +508,14 @@ def build_triples(
     rec_uri = f"concat({sq(T.EX_HASH)}, `cpeName`)"
     parts.append(PT.emit(cpe_records, PT.cpe_record_elements(rec_uri)))
 
-    # R5 — full CWE records for mentioned CWEs. The mention-id set is
-    # dictionary-bounded after the semi join, so an explicit broadcast
-    # replaces a two-shuffle sort-merge semi-join with a map-side probe.
-    parts.append(PT.emit_cwe_batch(gate(dims.cwe, "cwe", F.col("id_value"))))
-
-    # R6 records — CAPEC records for mentioned ids (canonical_id is
-    # "CAPEC-<n>"; the dictionary keys on the bare number)
-    parts.append(PT.emit_capec_batch(
-        gate(dims.capec, "capec",
-             F.concat(F.lit("CAPEC-"), F.col("ID")))
-    ))
-
-    # R7 — ATT&CK: all 7 typed relationship edges with a mentioned SOURCE
-    # OR TARGET, plus entity records for every mentioned id and for both
-    # endpoints of each emitted edge — ONE id union + ONE distinct + ONE
-    # emit (round 3 emitted mentioned and endpoint entities separately).
-    # mentioned_att is bounded by the ATT&CK dictionary at any corpus size.
-    mentioned_att = mid.filter(F.col("kind") == "attack").select(
-        F.col("canonical_id").alias("ID"))
-    rels = dims.attack_rels
-    gated_rels = gate(rels, "attack", F.col("source_id")).unionByName(
-        gate(rels, "attack", F.col("target_id"))
-    )  # a rel with both endpoints mentioned appears twice — the global
-    # A1 dedup absorbs the duplicate triples
-    parts.append(PT.emit_attack_relationships(dims.attack_ents, gated_rels))
-    valid_gated = PT.valid_attack_rels(dims.attack_ents, gated_rels)
-    ent_ids = (
-        mentioned_att
-        .unionByName(valid_gated.select(F.col("source_id").alias("ID")))
-        .unionByName(valid_gated.select(F.col("target_id").alias("ID")))
-        .distinct()
-    )
-    parts.append(PT.emit_attack_entities(
-        dims.attack_ents.join(F.broadcast(ent_ids), "ID", "leftsemi")
-    ))
-
-    # R8 — D3FEND record batch for mentioned, in-dictionary d3fend ids
-    # (incl. the _ID stray-quote typo: no _ID triples, d3fend_rml.ttl:29).
-    # Mentions carry the d3fend_id column's value, so the gate semi-joins
-    # on d3fend_id directly (equivalent to round 3's d3_id gate: the
-    # dictionary row is identified either way).
-    parts.append(PT.emit_d3fend_batch(
-        gate(dims.d3fend, "d3fend", F.col("d3fend_id"))
-    ))
-
-    result = PT.repair_and_dedup(PT._union(parts))
-    # join the scan-materialization barrier (started by linked_mentions
-    # while this plan was being constructed) before handing the plan to the
-    # caller: an action on `result` must never race the cache population.
-    # (A plain dict passed via ``mentions`` was built eagerly — no barrier.)
-    if isinstance(m, MentionTables):
-        m.join_barrier()
-    return result
+    # join the scan barrier (started by linked_mentions while the plan
+    # above was built) before handing any plan to the caller: an action
+    # must never race the cache population. While the per-kind caches
+    # fill, this thread collects the mentioned dictionary keys and builds
+    # the record half.
+    parts.append(m.join_barrier(lambda: _dictionary_records(
+        spark, dims, _dictionary_keys(spark, dims, m["mentions"]))))
+    return PT.repair_and_dedup(PT._union(parts))
 
 
 def materialize_graph(triples: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -523,26 +546,25 @@ def materialize_graph(triples: DataFrame) -> tuple[DataFrame, DataFrame]:
         triples.filter(~F.col("obj_is_literal") & (F.col("pred") != T.RDF_TYPE))
         .select("subj", "pred", "obj")
     )
-    labels = (
-        triples.filter(F.col("pred") == T.RDF_TYPE)
-        .groupBy(F.col("subj").alias("uri"))
-        .agg(F.sort_array(F.collect_set("obj")).alias("labels"))
-    )
-    props = (
-        triples.filter(F.col("obj_is_literal"))
+    # one grouping by (subj, pred), then one by subj, both behind the one
+    # shuffle on subj: labels are the rdf:type objects (literal or not),
+    # props the literal objects per predicate, so a literal rdf:type
+    # triple lands in both
+    is_type = F.col("pred") == T.RDF_TYPE
+    per_pred = (
+        triples.filter(is_type | F.col("obj_is_literal"))
+        .repartition("subj")
         .groupBy("subj", "pred")
-        .agg(F.sort_array(F.collect_set("obj")).alias("vals"))
-        .groupBy(F.col("subj").alias("uri"))
-        .agg(F.map_from_entries(
-            F.sort_array(F.collect_list(F.struct("pred", "vals")))
-        ).alias("props"))
+        .agg(F.sort_array(F.collect_set(F.when(is_type, F.col("obj"))))
+             .alias("types"),
+             F.sort_array(F.collect_set(F.when(F.col("obj_is_literal"),
+                                               F.col("obj"))))
+             .alias("vals"))
     )
-    nodes = labels.join(props, "uri", "full").select(
-        "uri",
-        F.coalesce("labels", F.array().cast("array<string>")).alias("labels"),
-        F.coalesce(
-            "props", F.map_from_arrays(F.array().cast("array<string>"),
-                                       F.array().cast("array<array<string>>"))
-        ).alias("props"),
+    nodes = per_pred.groupBy(F.col("subj").alias("uri")).agg(
+        F.coalesce(F.max(F.when(is_type, F.col("types"))),
+                   F.array().cast("array<string>")).alias("labels"),
+        F.map_from_entries(F.sort_array(F.collect_list(F.when(
+            F.size("vals") > 0, F.struct("pred", "vals"))))).alias("props"),
     )
     return nodes, edges

@@ -112,13 +112,11 @@ CPE_VP_SCHEMA = _schema(
 # ---------------------------------------------------------------------------
 
 
-def _arrow_df(spark: SparkSession, rows: list[tuple],
-              schema: Ty.StructType) -> DataFrame:
-    """Driver rows (tuples in ``schema`` order) → a ``LocalTableScan``."""
-    table = pa.Table.from_pylist(
+def _arrow_table(rows: list[tuple], schema: Ty.StructType) -> pa.Table:
+    """Driver rows (tuples in ``schema`` order) → a ``pyarrow.Table``."""
+    return pa.Table.from_pylist(
         [dict(zip(schema.names, r)) for r in rows],
         schema=to_arrow_schema(schema))
-    return spark.createDataFrame(table, schema)
 
 
 def latest_rows(rows: list[tuple], key_cols: tuple[str, ...]) -> list[tuple]:
@@ -155,18 +153,18 @@ def _cpe_rows() -> list[tuple]:
     return latest_rows(rows, ("cpeName",))
 
 
-def dim_cpe(spark: SparkSession) -> DataFrame:
-    return _arrow_df(spark, _cpe_rows(), CPE_SCHEMA)
+def cpe_table() -> pa.Table:
+    return _arrow_table(_cpe_rows(), CPE_SCHEMA)
 
 
-def dim_cpe_by_vendor_product(spark: SparkSession) -> DataFrame:
+def cpe_vp_table() -> pa.Table:
     """canonical vendor:product → latest cpe row (fuzzy-link target)."""
     rows = [r + (f"{r[5]}:{r[6]}",)
             for r in latest_rows(_cpe_rows(), ("vendor", "product"))]
-    return _arrow_df(spark, rows, CPE_VP_SCHEMA)
+    return _arrow_table(rows, CPE_VP_SCHEMA)
 
 
-def dim_cve(spark: SparkSession) -> DataFrame:
+def cve_table() -> pa.Table:
     rows = [(
         r["id"], r["published_raw"], r["lastModified_raw"],
         [(d["lang"], d["value"]) for d in r["descriptions"]],
@@ -175,10 +173,10 @@ def dim_cve(spark: SparkSession) -> DataFrame:
         r["obtainAllPrivilege"], r["userInteractionRequired"],
         r["weakness_values"], r["configurations"], r["evaluatorSolution"],
     ) for r in D.dict_cve()]
-    return _arrow_df(spark, rows, CVE_SCHEMA)
+    return _arrow_table(rows, CVE_SCHEMA)
 
 
-def dim_cwe(spark: SparkSession) -> DataFrame:
+def cwe_table() -> pa.Table:
     rows = []
     for w in D.dict_cwe():
         rap = w.get("related_attack_patterns")
@@ -195,27 +193,22 @@ def dim_cwe(spark: SparkSession) -> DataFrame:
             [(e.get("cwe_id"), e.get("Reference"), e.get("Description"),
               e.get("Link")) for e in obs] if obs else None,
         ))
-    return _arrow_df(spark, rows, CWE_SCHEMA)
+    return _arrow_table(rows, CWE_SCHEMA)
 
 
-def dim_attack(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
+def attack_tables() -> tuple[pa.Table, pa.Table]:
     ents, rels = D.dict_attack()
-    ent_df = _arrow_df(
-        spark,
-        [(e["ID"], e["name"], e["description"], e["url"], e["domain"],
-          e["kind"]) for e in ents],
-        ATTACK_ENT_SCHEMA,
+    return (
+        _arrow_table([(e["ID"], e["name"], e["description"], e["url"],
+                       e["domain"], e["kind"]) for e in ents],
+                     ATTACK_ENT_SCHEMA),
+        _arrow_table([(r["source ID"], r["source type"], r["target ID"],
+                       r["target type"]) for r in rels],
+                     ATTACK_REL_SCHEMA),
     )
-    rel_df = _arrow_df(
-        spark,
-        [(r["source ID"], r["source type"], r["target ID"], r["target type"])
-         for r in rels],
-        ATTACK_REL_SCHEMA,
-    )
-    return ent_df, rel_df
 
 
-def dim_capec(spark: SparkSession) -> DataFrame:
+def capec_table() -> pa.Table:
     rows = [(
         p["ID"], p["Name"], p["Abstraction"], p["Status"], p["Description"],
         p["Likelihood_Of_Attack"], p["Typical_Severity"],
@@ -224,11 +217,32 @@ def dim_capec(spark: SparkSession) -> DataFrame:
         p["Resources_Required"], p["Consequences"], p["Mitigations"],
         p["Example_Instances"], p["Related_Weaknesses"], p["Taxonomy_Mappings"],
     ) for p in D.dict_capec()]
-    return _arrow_df(spark, rows, CAPEC_SCHEMA)
+    return _arrow_table(rows, CAPEC_SCHEMA)
 
 
-def dim_d3fend(spark: SparkSession) -> DataFrame:
+def d3fend_table() -> pa.Table:
     rows = [(d["@id"], d["d3f:d3fend-id"], d["d3f:definition"],
              d["rdfs:label"], d["off_tech_id"])
             for d in D.dict_d3fend()]
-    return _arrow_df(spark, rows, D3FEND_SCHEMA)
+    return _arrow_table(rows, D3FEND_SCHEMA)
+
+
+def dim_tables() -> dict[str, pa.Table]:
+    """Every dictionary as a driver-held Arrow table, keyed as ``SCHEMAS``."""
+    ents, rels = attack_tables()
+    return {"cve": cve_table(), "cwe": cwe_table(), "cpe": cpe_table(),
+            "cpe_vp": cpe_vp_table(), "attack_ents": ents,
+            "attack_rels": rels, "capec": capec_table(),
+            "d3fend": d3fend_table()}
+
+
+SCHEMAS = {"cve": CVE_SCHEMA, "cwe": CWE_SCHEMA, "cpe": CPE_SCHEMA,
+           "cpe_vp": CPE_VP_SCHEMA, "attack_ents": ATTACK_ENT_SCHEMA,
+           "attack_rels": ATTACK_REL_SCHEMA, "capec": CAPEC_SCHEMA,
+           "d3fend": D3FEND_SCHEMA}
+
+
+def local_df(spark: SparkSession, name: str, table: pa.Table) -> DataFrame:
+    """The driver-held table of dictionary ``name`` (or rows taken from
+    it) as a ``LocalTableScan``."""
+    return spark.createDataFrame(table, SCHEMAS[name])
