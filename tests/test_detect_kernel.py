@@ -10,7 +10,9 @@ import glob
 import os
 import pickle
 import re
+import time
 
+import pyarrow as pa
 import pytest
 
 from uckg_spark.fixtures import dicts as D
@@ -80,6 +82,16 @@ ID_CASES = [
     "CAPEC-66 CAPEC- CAPEC-66a D3-FAPA D3-fapa D3- CWE-79CWE-80",
     "CVE-2024-1234CVE-2024-5678", "CVE-CVE-2024-1234", "CWE-CWE-79",
     " T1003.001 ", "ſT1059 KT1059",
+    # texts made only of candidates
+    "CVE-CVE-CAPEC-C1234TA1234", "CVE-CWE-CAPEC-D3-cpe:2.3:",
+    "T1234T1234T1234", "TA1234 CA1234 C1234.123 CAPEC-1", "CWE-1CWE-2 CWE-3",
+    # Python's \d on str is Unicode Nd: Arabic-Indic, Devanagari, fullwidth
+    # and astral mathematical digits make ids of every kind (a [0-9]
+    # prefilter drops them); non-digits after T/TA make none
+    "x T١٢٣٤ y CVE-٢٠٢٤-١٢٣٤٥ CWE-٧٩ TA٠٠٠٤ z",
+    "CAPEC-६६ T१०५९.००३ G००१६ S１２３４ M１０３６ C𝟎𝟎𝟏𝟓",
+    "cpe:2.3:a:v:p:١:*:*:*:*:*:*:* CVE-𝟐𝟎𝟐𝟒-𝟏𝟐𝟑𝟒 D3-FAPA",
+    "TA١٢٣ T١٢٣٤٥ CVE-٢٠٢٤-١٢٣ xT١٢٣٤ Tµµµµ T中文字符 TAéééé",
 ]
 
 
@@ -99,7 +111,11 @@ ALIAS_CASES = [
     "KELVIN WORKS", "kelvin works", "İSTANBUL GATE", "i̇stanbul gate",
     "İacme soft", "acme soft İ acme soft", "data relay node",
     "DATA RELAY\nNODE", "x.y tool", "ax.y tool",
-    "ß  acme  soft   straße   router ﬁ",
+    "ß  acme  soft   straße   router ﬁ", "acmeacme acme acmeacme",
+    # astral, combining and casefold-expanding characters shift code-point
+    # offsets against UTF-8 byte offsets and casefolded offsets
+    "😀𝒜 acme soft", "e\u0301\u0301 acme soft", "ß ß acme soft ﬁ ﬃ",
+    "İİ acme soft İ", "𝟘\U0010ffff\tacme  soft\x85webgate 😀",
 ]
 
 
@@ -112,6 +128,80 @@ def test_alias_adversarial_equals_golden(text, extra_matchers):
         mixed = f"{text}\t{alias.upper()} CVE-2024-0001 {text}"
         _check(mixed, *extra_matchers)
         _check(alias.replace(" ", "  \n "), *extra_matchers)
+
+
+def test_lone_surrogate_texts_equal_golden(extra_matchers):
+    """``pa.array`` rejects a lone surrogate, so the RE2 pass sees U+FFFD
+    in its place; offsets and hits must not move."""
+    for text in ["CVE-2024-0001 \ud800 acme soft T1059",
+                 "\udfffacme soft\ud800 CVE-2024-0002\udc00T1059\ud83d",
+                 "T\ud800\ud800\ud800\ud800 \ufffd acme \ud800 soft",
+                 "ß\ud800 straße router İ acme soft"]:
+        with pytest.raises(UnicodeEncodeError):
+            pa.array([text])
+        _check(text, *extra_matchers)
+    pats = EXTRA_ALIASES + ["\ud800x tool", "\ufffdy tool"]
+    kernel, gold = AhoCorasick(pats), golden.AliasMatcher(pats)
+    for text in ["a \ud800x tool b \ufffdx tool", "\ud800y tool \ufffdy tool"]:
+        assert kernel.find(text) == gold.find(text) != []
+
+
+def test_overlapping_first_words_equal_golden():
+    """RE2 resumes after a match, so a first word starting inside another's
+    occurrence (suffix = prefix, self-overlap) is found only by the
+    re-check inside each match."""
+    pats = ALIASES + ["at&t wireless", "t mobile", "-- x", "aaaa b"]
+    kernel, gold = AhoCorasick(pats), golden.AliasMatcher(pats)
+    for text, want in [("at&t mobile", [("t mobile", 3)]),
+                       ("----- x", [("-- x", 3)]),
+                       ("--- x and at&t wireless", [("-- x", 1),
+                                                    ("at&t wireless", 10)])]:
+        assert kernel.find(text) == gold.find(text) == want
+    for text in ["hoolinitech", "bootyrell", "umbrellacme", "aaaaaaa b",
+                 "hooli initech boot tyrell umbrella acme"]:
+        assert kernel.find(text) == gold.find(text)
+
+
+def test_metacharacter_first_words_equal_golden():
+    pats = ALIASES + ["c++ builder", "node.js runtime", "at&t wireless",
+                      "a|b tool", "x? y", "(paren) kit", "[ab] set", "\\d x"]
+    kernel, gold = AhoCorasick(pats), golden.AliasMatcher(pats)
+    text = ("C++ Builder, node.js runtime and AT&T wireless; a|b tool, "
+            "x? y (paren) kit [ab] set \\d x; cpp builder nodexjs runtime "
+            "a tool b tool ab set 7 x")
+    assert kernel.find(text) == gold.find(text)
+    assert len(gold.find(text)) == 8
+
+
+def test_empty_alias_table_finds_nothing():
+    for pats in ([], ["", "  \t"]):
+        kernel, gold = AhoCorasick(pats), golden.AliasMatcher(pats)
+        for text in ["", "acme soft", "  ", "CVE-2024-0001"]:
+            assert kernel.find(text) == gold.find(text) == []
+
+
+def test_regex_engine_at_its_pattern_bound():
+    """2000 patterns with 2000 distinct first words: still the regex
+    engine, equal to golden on a bench page, and one call stays far below
+    what 2000 ``str.find`` passes over that page cost (~0.4 s on a 4-core
+    host; RE2 compiles the alternation per call, ~5 ms)."""
+    words = [f"{w}{i}" for i, w in enumerate(
+        ["vendor", "acme", "corp", "soft", "tool"] * 400)]
+    pats = [f"{w} suite" for w in words[: 2000 - 3]] + [
+        "Acme Soft", "Straße Router", "credential vault dredging"]
+    aho, gold = AhoCorasick(pats), golden.AliasMatcher(pats)
+    assert len(aho._patterns) == 2000 and aho._regex is not None
+    text = extract_text(page_row(3, 9015, 1400)["html"])
+    text += " Vendor0 suite, tool1994 SUITE and acme soft"
+    assert len(text) > 100_000
+    got = aho.find(text)
+    assert got == gold.find(text) and len(got) >= 3
+    times = []
+    for _ in range(3):
+        t0 = time.perf_counter()
+        aho.find(text)
+        times.append(time.perf_counter() - t0)
+    assert sorted(times)[1] < 0.1, times
 
 
 def test_alias_hits_at_text_edges(extra_matchers):

@@ -217,6 +217,19 @@ UNTERMINATED_COMMENT = [
     "<p>x</p><!-- one > two <!-- three",   # an opener with no '>' after
     "<!-- a > <![CDATA[x]]> b",
     "<!-- a > </p x <!-- b > c",
+    # openers past the last '>': data up to the next '<', or to the end
+    "<p>a</p><!-- x <!-- y <!-- z",
+    "<!-- a <!-- b &amp; < c &lt",
+    "<!--&amp;<!--&lt<!--",
+    "<p>a</p><!-- x <",
+    "<p>a</p><!-- x <!-",
+    "<p>x</p><!-- one > two <!-- three <p four",
+    "<p>x</p><!-- one > two <!-- three </x <? y <!doctype z <!-",
+    "<p>x</p><!-- one > two <!-- three <![CDATA[ y",
+    "<!-- a > <script>x<!-- y",
+    "<!-- a > <style>x</style><!-- y <!-- z",
+    "<!-- a > <b>c</b>d &am<!-- e",
+    "<p>x</p><!-- a <b&amp;\x00 c",  # the parser emits '<b&amp;' raw
 ]
 
 
@@ -232,6 +245,53 @@ def test_unterminated_comment_page_takes_fast_path_linearly():
     assert time.perf_counter() - t0 < 0.25, len(html)
     assert _fast_extract(html) is not _FALLBACK
     assert got == golden.extract_text(html)
+
+
+def test_openers_past_the_last_gt_stay_linear():
+    """Openers with no '>' after them: html.parser searches to the end of
+    the page for one at every opener (~1.2 s at 56 KB)."""
+    html = "<p>a</p>" + "<!-- x " * 8000  # 56 KB
+    t0 = time.perf_counter()
+    got = extract_text(html)
+    assert time.perf_counter() - t0 < 0.1, len(html)
+    assert _fast_extract(html) is not _FALLBACK
+    assert got == golden.extract_text(html)
+
+
+def test_marked_section_past_the_last_gt_goes_to_the_parser():
+    html = "<p>x</p><!-- a <![ y"
+    with pytest.raises(AssertionError):  # html.parser's own _scan_name
+        golden.extract_text(html)
+    assert _fast_extract(html) is _FALLBACK
+
+
+def test_fuzz_openers_past_the_last_gt_byte_identity():
+    """Tails of at most 20 KB whose last stretch holds openers with no '>'
+    after them, lone '<' and constructs the parser must see: kernel ==
+    golden copy, mostly on the fast path."""
+    head = ["<p>", "</p>", "-->", ">", "x y", "&amp;", "<script>",
+            "</script>", "<style>", "</style>", "<b a='c'>", "<!x>", "\n"]
+    last = ["<!--", "<!-- ", "< ", " <\t", "x", "&amp;", "&lt", "&am", "p;",
+            "\n", "-", "--", "<!-", " y ", "  ", "</x", "<?", "<!x", "</"]
+    odd = ["<p", "<a&amp;'", "<!["]  # the parser reads these further
+    rng = random.Random(20261021)
+    fast = 0
+    for i in range(400):
+        tail = rng.choices(last, k=rng.randint(1, 400))
+        if i % 4 == 0:
+            tail.insert(rng.randrange(len(tail) + 1), rng.choice(odd))
+        html = ("<p>" + "lorem &amp; ipsum " * rng.randint(0, 200)
+                + "".join(rng.choices(head, k=rng.randint(0, 30))) + "<!--"
+                + "".join(rng.choices(head, k=rng.randint(0, 30)))
+                + "".join(tail))
+        assert len(html) <= 20_000
+        try:
+            want = golden.extract_text(html)
+        except AssertionError:
+            continue  # html.parser itself raises on some marked sections
+        assert extract_text(html) == want, html[-300:]
+        fast += _fast_extract(html) is not _FALLBACK
+    assert fast > 150, fast
 
 
 def test_fuzz_unterminated_comment_pages_byte_identity():

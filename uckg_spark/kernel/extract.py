@@ -154,10 +154,15 @@ _MARKUP = _split_re(r"!--(?:(?s:.*?)--\s*>|((?s:.*)))")
 # each as unterminated: it emits unescape(rawdata[i:k]) as data, k past
 # the next '>' after i+1, else at the next '<', else i+1, and goes on at
 # k. The tail split captures that data up to the next '>' without
-# rescanning for '-->'; an opener with no '>' left falls back.
+# rescanning for '-->'. Past the tail's last '>' no comment, end tag,
+# declaration or PI can end, so there each such opener's data runs to the
+# next '<' (the last one's, from i+1 on, to the end): that stretch is
+# emitted as unescape(stretch) unless a start tag or a marked section,
+# which the parser reads further, sends the page to it.
 _TAIL = _split_re(r"(!--[^>]*>)")
 _STRIDE = 5  # a data run, then the four groups of one match
 _NOT_LONE = re.compile(r"<[a-zA-Z/!?]")
+_NOT_DATA = re.compile(r"<(?:[a-zA-Z]|!\[)")
 
 _FALLBACK = object()
 
@@ -188,16 +193,23 @@ def _verified_runs(parts: list):
 def _tail_text(tail: str):
     """The text of ``tail``, which starts at the page's first
     unterminated '<!--', as goahead(end=True) emits it."""
-    if tail.find("<!--", tail.rfind(">") + 1) >= 0:
-        return _FALLBACK  # an opener with no '>' after it
+    g = tail.rfind(">") + 1
+    rest = tail[g:]
+    if _NOT_DATA.search(rest):
+        return _FALLBACK
+    if not g:
+        return _unescape(rest)
     k = tail.index(">") + 1
-    parts = _TAIL.split(tail[k:])
+    parts = _TAIL.split(tail[k:g])
+    if rest and not parts[-1] and len(parts) > 1 and (
+            parts[-5] is not None or parts[-4] is not None):
+        return _FALLBACK  # a script/style block may run on over rest
     runs = _verified_runs(parts)
     if runs is _FALLBACK:
         return _FALLBACK
     pieces = [_unescape("<" + p) if p else "" for p in parts[4::_STRIDE]]
     return _unescape(tail[:k]) + "".join(
-        r + p for r, p in zip(runs, pieces + [""]))
+        r + p for r, p in zip(runs, pieces + [""])) + _unescape(rest)
 
 
 def _fast_extract(html: str):

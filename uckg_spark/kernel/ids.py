@@ -16,21 +16,35 @@ alphanumeric/dash run — ``CVE-123`` must NOT match (4-digit year missing)
 and ``XCVE-2024-1234`` / ``CVE-2024-12345Z`` must not match either
 (FIXTURES.md decoy spec).
 
-Both scans prefilter, then verify: a C-speed literal search finds
-candidate starts, and the expensive matcher runs only there.
+Both scans prefilter, then verify: one RE2 pass finds candidate starts,
+and the expensive matcher runs only there.
 
+- The pass (``_candidate_starts``): ``pyarrow.compute.split_pattern_regex``
+  cuts the text at the leftmost non-overlapping matches of a candidate
+  alternation; ``utf8_length`` of the pieces gives code-point offsets,
+  and ``re`` re-matches the alternation at each cut for its end. Both
+  engines read the alternation alike (literals, escaped punctuation,
+  classes of literal characters, ``?``, ``{n}``), and no two of its
+  branches match at one start, so the spans agree. RE2 resumes after a
+  match; every position inside one is re-checked with ``re``, so
+  overlapping occurrences are kept. A text that Arrow cannot hold (a lone
+  surrogate) goes through the same pass with each surrogate replaced by
+  U+FFFD: offsets keep, and the candidates stay a superset.
 - ``scan_ids``: every ``_SCAN_RE`` match starts with ``CVE-``, ``CWE-``,
-  ``CAPEC-``, ``D3-``, ``cpe:2.3:`` or a ``[TGSMC]A?\\d{4}`` run, so
-  ``str.find`` over those literals plus one finditer of the run give a
-  superset of the match starts. ``_SCAN_RE.match`` at each start in
-  order, resuming at the match end, is then exactly ``finditer``: the
-  lookbehind still sees the text before the start.
+  ``CAPEC-``, ``D3-``, ``cpe:2.3:`` or a ``[TGSMC]A?\\d{4}`` run.
+  ``_ID_CANDIDATES`` finds them with the digit class widened to 0-9 plus
+  every non-ASCII code point: a superset of ``re``'s ``\\d`` (Unicode
+  Nd) that does not depend on either engine's Unicode tables.
+  ``_SCAN_RE.match`` at each start in order, resuming at the match end,
+  is then exactly ``finditer``: the lookbehind still sees the text before
+  the start.
 - ``AhoCorasick.find``: a match in the normalized text begins with its
   pattern's first word, which holds no whitespace and so appears verbatim
-  in ``text.casefold()``. The needle ``find``s run there; the verifier is
-  the same longest-first alternation with each pattern space as ``\\s+``
-  (``re``'s ``\\s`` is ``str.isspace``, the class ``split()`` collapses).
-  Offsets are mapped into normalized-text space only for the hits.
+  in ``text.casefold()``. The pass runs there over the first words; the
+  verifier is the same longest-first alternation with each pattern space
+  as ``\\s+`` (``re``'s ``\\s`` is ``str.isspace``, the class ``split()``
+  collapses). Offsets are mapped into normalized-text space only for the
+  hits.
 
 ``oracle/detect.py`` keeps the plain scans as the golden copy.
 """
@@ -39,6 +53,9 @@ from __future__ import annotations
 
 import re
 from collections import deque
+
+import pyarrow as pa
+import pyarrow.compute as pc
 
 # fullmatch-able core patterns (validators)
 CVE_RE = r"CVE-\d{4}-\d{4,}"
@@ -82,9 +99,38 @@ def classify_id(token: str) -> str | None:
     return None
 
 
-# every _SCAN_RE match starts with one of these literals or a _RUN_RE hit
-_LITERALS = ("CVE-", "CWE-", "CAPEC-", "D3-", "cpe:2.3:")
-_RUN_RE = re.compile(r"[TGSMC]A?\d{4}")
+# every _SCAN_RE match starts with a match of this alternation; its digit
+# class (0-9 and every code point from U+0080) holds all of \d
+_ID_CANDIDATES = re.compile(
+    "CVE-|CWE-|CAPEC-|D3-|cpe:2\\.3:|[TGSMC]A?[0-9\x80-\U0010ffff]{4}")
+_SURROGATES = re.compile("[\ud800-\udfff]")
+
+
+def _arrow_safe(s: str) -> str:
+    """``s`` with each lone surrogate, which UTF-8 cannot hold, replaced by
+    U+FFFD: one code point for one, so offsets keep."""
+    return _SURROGATES.sub("\ufffd", s)
+
+
+def _candidate_starts(text: str, rx: re.Pattern) -> list[int]:
+    """Start offsets, ascending, of every occurrence of ``rx`` in ``text``,
+    overlapping ones included, from one RE2 pass (module docstring)."""
+    try:
+        arr = pa.array([text], pa.large_string())
+    except UnicodeEncodeError:
+        text = _arrow_safe(text)
+        arr = pa.array([text], pa.large_string())
+    pieces = pc.split_pattern_regex(arr, pattern=rx.pattern).values
+    lens = pc.utf8_length(pieces).to_pylist()
+    match = rx.match
+    starts: list[int] = []
+    pos = lens[0]
+    for n in lens[1:]:
+        end = match(text, pos).end()
+        starts.append(pos)
+        starts.extend(q for q in range(pos + 1, end) if match(text, q))
+        pos = end + n
+    return starts
 
 
 def scan_ids(text: str | None) -> list[tuple[str, str, int]]:
@@ -96,17 +142,10 @@ def scan_ids(text: str | None) -> list[tuple[str, str, int]]:
     """
     if not text:
         return []
-    starts = [m.start() for m in _RUN_RE.finditer(text)]
-    find = text.find
-    for lit in _LITERALS:
-        i = find(lit)
-        while i != -1:
-            starts.append(i)
-            i = find(lit, i + 1)
     out: list[tuple[str, str, int]] = []
     end = 0
     match = _SCAN_RE.match
-    for s in sorted(starts):
+    for s in _candidate_starts(text, _ID_CANDIDATES):
         if s < end:
             continue  # inside the previous match, as finditer resumes
         m = match(text, s)
@@ -157,9 +196,11 @@ class AhoCorasick:
 
     Two engines, ONE semantics (equivalence is tested on the fixture
     corpus, tests/test_kernel.py):
-    - ≤ ``_REGEX_MAX_PATTERNS`` patterns: first-word needles over the
-      casefolded text, verified by a compiled longest-first alternation
-      (module docstring) — C speed, the fixture/bench path.
+    - ≤ ``_REGEX_MAX_PATTERNS`` patterns: one RE2 pass for the patterns'
+      first words over the casefolded text, verified by a compiled
+      longest-first alternation (module docstring) — C speed, the
+      fixture/bench path. RE2 compiles the first-word alternation on every
+      call: ~0.05 ms at 18 words, a few ms at 2000.
     - above that: the classic trie + failure-link automaton — O(text)
       regardless of dictionary size, the production path for ~1.3M CPE
       vendor/product strings. Built on first use, so a regex-engine
@@ -178,7 +219,7 @@ class AhoCorasick:
         self._patterns = sorted({normalize_surface(p) for p in patterns} - {""})
         self._next: list[dict[str, int]] | None = None  # trie, on first use
         self._regex = None
-        self._needles: list[str] = []
+        self._first_words = None  # candidate alternation of the regex engine
         if len(self._patterns) <= self._REGEX_MAX_PATTERNS:
             longest_first = sorted(self._patterns, key=lambda s: (-len(s), s))
             body = "|".join(r"\s+".join(map(re.escape, p.split(" ")))
@@ -191,8 +232,11 @@ class AhoCorasick:
             # keep only first words that do not extend another (a prefix
             # needle's hits cover its extensions')
             words = sorted({p.split(" ")[0] for p in self._patterns})
-            self._needles = [w for w in words if not any(
+            needles = [w for w in words if not any(
                 w != o and w.startswith(o) for o in words)]
+            if needles:
+                self._first_words = re.compile(
+                    _arrow_safe("|".join(map(re.escape, needles))))
 
     def _build_trie(self):
         # nodes: list of dicts char->node_id
@@ -235,21 +279,16 @@ class AhoCorasick:
         earliest matching position take the longest pattern, then continue
         after its end. Offsets are into the normalized string.
 
-        Regex path: first-word needle ``find``s (C speed) over
-        ``text.casefold()``, the anchored alternation verified only at
-        needle hits, then each hit's offset mapped into normalized-text
+        Regex path: one RE2 pass over ``text.casefold()`` finds where the
+        first words occur, the anchored alternation is verified only
+        there, then each hit's offset is mapped into normalized-text
         space. Equal to the normalize-then-match scan of
         ``oracle/detect.py`` (pinned by tests/test_detect_kernel.py)."""
         if self._regex is None:
             return self._find_trie(normalize_surface(text))
+        if self._first_words is None:
+            return []  # no patterns
         cf = text.casefold()
-        starts: set[int] = set()
-        find = cf.find
-        for nd in self._needles:
-            i = find(nd)
-            while i != -1:
-                starts.add(i)
-                i = find(nd, i + 1)
         out: list[tuple[str, int]] = []
         end = 0
         # normalized offset = cf offset - chars that collapsing drops
@@ -257,7 +296,7 @@ class AhoCorasick:
         # whole (one char here, the rest in its _WS_RUNS match)
         last, dropped = 0, int(cf[:1].isspace())
         match = self._regex.match
-        for pos in sorted(starts):
+        for pos in _candidate_starts(cf, self._first_words):
             if pos < end:
                 continue  # inside the previous match (non-overlap)
             if pos > 0 and self._is_word_char_lc(cf[pos - 1]):

@@ -7,13 +7,14 @@ alias surface forms, with TF-IDF cosine + alias-prior scoring
 to canonical ids. The automaton + IDF table are built ONCE on the driver
 and shipped via a Spark broadcast — never per task.
 
-Both detectors prefilter, then verify (``kernel.ids``): ``str.find`` over
-the id grammars' literal prefixes (plus one regex pass for ATT&CK-shaped
-runs) and over each alias's first word yields a superset of the match
-starts, since every match begins with one of them; the id and alias
-matchers then run only at those starts, in document order, resuming
-after each match, so the output equals a full scan's. The oracle checks
-this against its own full-scan copy (``oracle/detect.py``).
+Both detectors prefilter, then verify (``kernel.ids``): one RE2 pass
+per text (``pyarrow.compute.split_pattern_regex``) over an alternation of
+the id grammars' prefixes, and one over the casefolded text for the
+aliases' first words, yield a superset of the match starts, since every
+match begins with one of them; the id and alias matchers then run only
+at those starts, in document order, resuming after each match, so the
+output equals a full scan's. The oracle checks this against its own
+full-scan copy (``oracle/detect.py``).
 
 Output mention table: (url, kind, token, canonical_id)
 - id mentions: kind ∈ {cve,cwe,capec,attack,cpe}, canonical_id = token
