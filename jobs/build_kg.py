@@ -47,7 +47,7 @@ def scan_pin(pages_df, alias_rows: list[dict]) -> str | None:
 
 
 def run(spark, pages: str, out: str, resume_root: str | None = None,
-        mention_partitions: int | None = None, dims=None) -> dict:
+        dims=None) -> dict:
     from uckg_spark.plans.kg_pipeline import (
         KgDims, build_triples, linked_mentions, materialize_graph)
     from uckg_spark.sources.catalog import GraphCatalog
@@ -76,12 +76,11 @@ def run(spark, pages: str, out: str, resume_root: str | None = None,
             # any crashed scan's orphan past the grace age)
             stages.expire_snapshots("mentions")
         m = linked_mentions(
-            spark, None, dims, mention_partitions,
+            spark, None, dims,
             raw_mentions=stages.read_table(spark, "mentions",
                                            snapshot_id=snap))
     else:
-        m = linked_mentions(spark, pages_df, dims, mention_partitions,
-                            defer_barrier=True)
+        m = linked_mentions(spark, pages_df, dims)
     triples = None
     try:
         triples = build_triples(spark, None, dims, mentions=m)
@@ -108,15 +107,13 @@ def main() -> None:
     ap.add_argument("--out", required=True, help="output graph catalog root")
     ap.add_argument("--resume-root", default=None,
                     help="catalog root holding the pinned mention scan")
-    ap.add_argument("--mention-partitions", type=int, default=None)
     args = ap.parse_args()
 
     from uckg_spark.session import build_session
 
     spark = build_session(app_name="uckg-build-kg")
     print(json.dumps(run(
-        spark, args.pages, args.out, resume_root=args.resume_root,
-        mention_partitions=args.mention_partitions)))
+        spark, args.pages, args.out, resume_root=args.resume_root)))
 
 
 if __name__ == "__main__":

@@ -24,8 +24,7 @@ sys.path.insert(0, ".")
 
 
 def run(spark, pages_catalog: str, graph: str, pages_table: str = "pages",
-        n_tasks: int = 32, mention_partitions: int | None = None,
-        compact_after: int = 0, dims=None) -> dict:
+        n_tasks: int = 32, compact_after: int = 0, dims=None) -> dict:
     from uckg_spark.plans.incremental import sync_kg
     from uckg_spark.plans.kg_pipeline import KgDims
     from uckg_spark.sources.catalog import GraphCatalog
@@ -34,8 +33,7 @@ def run(spark, pages_catalog: str, graph: str, pages_table: str = "pages",
     summary = sync_kg(
         spark, GraphCatalog(pages_catalog), graph_cat,
         dims if dims is not None else KgDims(spark),
-        pages_table=pages_table,
-        n_tasks=n_tasks, mention_partitions=mention_partitions,
+        pages_table=pages_table, n_tasks=n_tasks,
     )
     if compact_after > 0 and summary["status"] == "synced":
         for table, compact in (
@@ -66,7 +64,6 @@ def main() -> None:
                     help="max files per mention-store write and per "
                          "mention-store compaction (the edge and node "
                          "writes are sized from their data)")
-    ap.add_argument("--mention-partitions", type=int, default=None)
     ap.add_argument("--compact-after", type=int, default=0,
                     help="compact edges/mentions when their heads span "
                          "more than this many dirs (0 = never)")
@@ -78,7 +75,6 @@ def main() -> None:
     print(json.dumps(run(
         spark, args.pages_catalog, args.graph,
         pages_table=args.pages_table, n_tasks=args.n_tasks,
-        mention_partitions=args.mention_partitions,
         compact_after=args.compact_after)))
 
 

@@ -5,6 +5,7 @@ the reimplemented-RML-mapper correctness surface (SURVEY.md §5.2)."""
 from uckg_spark.fixtures import dicts as D
 from uckg_spark.oracle import emitters as E
 from uckg_spark.plans import triples as PT
+from uckg_spark.plans.kg_pipeline import _dictionary_records
 
 
 def _gold():
@@ -23,12 +24,19 @@ def _gold():
     )
 
 
-def test_full_dictionary_batch_parity(kg_dims):
+def test_full_dictionary_batch_parity(spark, kg_dims):
+    """The build's own record half, with every dictionary key mentioned."""
     gold = {tuple(t) for t in _gold()}
-    got_df = PT.emit_all_dictionary_batches(
-        kg_dims.cve, kg_dims.cwe, kg_dims.cpe, kg_dims.attack_ents,
-        kg_dims.attack_rels, kg_dims.capec, kg_dims.d3fend,
-    )
+    t = kg_dims.tables
+
+    def ids(col, prefix=""):
+        return {prefix + v for v in col.to_pylist() if v is not None}
+
+    keys = {"cve": ids(t["cve"]["id"]), "cwe": ids(t["cwe"]["id_value"]),
+            "capec": ids(t["capec"]["ID"], "CAPEC-"),
+            "attack": ids(t["attack_ents"]["ID"]),
+            "d3fend": ids(t["d3fend"]["d3fend_id"])}
+    got_df = PT.repair_and_dedup(_dictionary_records(spark, kg_dims, keys))
     got = {tuple(r) for r in got_df.collect()}
     assert got == gold
     assert len(gold) > 1500  # non-trivial corpus

@@ -61,10 +61,13 @@ def test_whole_stage_codegen_active_and_partial_agg(spark):
 
 def test_mention_link_joins_broadcast(spark, pages_path, kg_dims):
     lm = linked_mentions(spark, read_pages(spark, pages_path), kg_dims)
-    for kind in ("cwe", "capec", "attack"):
-        plan = _plan(lm[kind])
-        assert "BroadcastHashJoin" in plan, kind
-        assert "SortMergeJoin" not in plan, kind
+    try:
+        for kind in ("cwe", "capec", "cpe"):
+            plan = _plan(lm[kind])
+            assert "BroadcastHashJoin" in plan, kind
+            assert "SortMergeJoin" not in plan, kind
+    finally:
+        lm.unpersist()
 
 
 def test_no_python_udf_in_emission(spark, pages_path, kg_dims):

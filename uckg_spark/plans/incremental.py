@@ -17,8 +17,8 @@ The split that makes it scale:
   equality-delete the touched urls, append the fresh scan —
   O(|changed pages|) per sync.
 - **Linking + emission recompute from the mention store.** Mentions are
-  ~1000× smaller than pages (measured in kg_pipeline); re-deriving the
-  per-kind tables and re-emitting triples from the store is
+  ~1000× smaller than pages (measured in kg_pipeline); re-linking the
+  store and re-emitting triples from it is
   mention/dictionary-bounded, not corpus-bounded. This sidesteps the
   provenance problem that sinks triple-level reference counting: record
   triples (R2/R5/...) are supported by EVERY page mentioning the id, so
@@ -65,7 +65,6 @@ def sync_kg(
     dims: KgDims,
     pages_table: str = "pages",
     n_tasks: int = 8,
-    mention_partitions: int | None = None,
 ) -> dict:
     """One incremental sync: pages-changelog → mention store → edge
     delta. Returns a summary dict; ``status`` is ``up_to_date`` when the
@@ -117,11 +116,10 @@ def sync_kg(
 
     # -- re-link + re-emit from the store (mention-sized, not corpus) --
     store = graph_cat.read_table(spark, "mentions")
-    m = linked_mentions(spark, None, dims,
-                        mention_partitions=mention_partitions,
-                        raw_mentions=store)
-    # materialize_graph reuses the triple set: the edge delta's actions
-    # and the nodes rebuild read it once computed; released below
+    m = linked_mentions(spark, None, dims, raw_mentions=store)
+    # build_triples joins the scan barrier; materialize_graph reuses the
+    # triple set: the edge delta's actions and the nodes rebuild read it
+    # once computed; released below
     triples = build_triples(spark, None, dims, mentions=m)
     nodes, edges = materialize_graph(triples)
 

@@ -55,33 +55,31 @@ class KgDims:
 
 
 class MentionTables(dict):
-    """Per-kind mention DataFrames keyed by kind (plus ``mentions``).
+    """The persisted mention stream (``mentions``) and the per-kind
+    mention views over it, keyed by kind.
 
-    Built with ``defer_barrier=True``, the scan materializes in a
-    background thread: callers MUST invoke :meth:`join_barrier` before
-    triggering any downstream action (``build_triples`` does). The method
-    is explicit and idempotent — it joins the scan thread, re-raises any
-    scan error, and materializes the per-kind caches; a second call runs
-    only ``alongside``. (Replaces a magic ``"_barrier"`` dict key that
-    callers could silently forget, swallowing scan errors.)"""
+    ``linked_mentions`` starts materializing the scan on a background
+    thread: callers MUST invoke :meth:`join_barrier` before triggering any
+    downstream action (``build_triples`` does)."""
 
-    _barrier_fn = None
+    _join_scan = None
 
-    def join_barrier(self, alongside=None):
-        """Join the scan, then fill the per-kind caches. ``alongside``, a
-        callable, runs on this thread while they fill (after the scan, so
-        it may run jobs on the mention cache); its result is returned."""
-        fn, self._barrier_fn = self._barrier_fn, None
-        if fn is not None:
-            return fn(alongside)
-        return alongside() if alongside is not None else None
+    def join_barrier(self) -> None:
+        """Join the scan thread and re-raise what the scan raised.
+        Idempotent: a second call does nothing."""
+        join, self._join_scan = self._join_scan, None
+        if join is not None:
+            join()
 
     def unpersist(self) -> None:
-        """Release the cached mention stream and per-kind tables (a no-op
-        for the lazy ones): a long-lived driver that links repeatedly
-        accumulates cache blocks otherwise."""
-        for df in self.values():
-            df.unpersist()
+        """Join the scan, then release the mention cache: a long-lived
+        driver that links repeatedly accumulates cache blocks otherwise,
+        and a released scan must not keep running. A scan error surfaces
+        here too."""
+        try:
+            self.join_barrier()
+        finally:
+            self["mentions"].unpersist()
 
 
 def _in_background(fn):
@@ -113,7 +111,6 @@ def _in_background(fn):
 def linked_mentions(
     spark: SparkSession, pages: DataFrame, dims: KgDims,
     mention_partitions: int | None = None,
-    defer_barrier: bool = False,
     raw_mentions: DataFrame | None = None,
 ) -> "MentionTables":
     """Stages 1–3: extract, detect, link.
@@ -124,20 +121,21 @@ def linked_mentions(
     derivation instead of re-scanning pages; ``pages`` is ignored. The
     scan is the corpus-sized cost, the linking is mention-sized.
 
-    SHUFFLE BUDGET: the mention stream is persisted once; every per-kind
-    table below is a narrow filter plus, for the dictionary-checked kinds,
-    a broadcast join against a local relation: no shuffle of the mention
-    stream. The co-mention pair joins in build_triples shuffle on url — and
-    are LEFT TO AQE on purpose: at small scale AQE converts them to
-    broadcast joins and coalesces the tiny post-shuffle partitions; at web
-    scale it splits skewed url partitions. A static repartition(url) here
-    (measured) pins the plan to fixed-width sort-merge joins and forfeits
-    both adaptations. Mention rows are deliberately NOT deduplicated (a
-    page may mention the same id twice): every consumer is a pair-distinct,
-    a dropDuplicates, the dictionary key distinct or the global A1 dedup —
+    SHUFFLE BUDGET: the mention stream is persisted once, and it is the
+    only cache; every per-kind table below is a lazy view of it, a narrow
+    filter plus, for the dictionary-checked kinds, a broadcast join
+    against a local relation: no shuffle of the mention stream. The
+    co-mention pair joins in build_triples shuffle on url — and are LEFT
+    TO AQE on purpose: at small scale AQE converts them to broadcast joins
+    and coalesces the tiny post-shuffle partitions; at web scale it splits
+    skewed url partitions. A static repartition(url) here (measured) pins
+    the plan to fixed-width sort-merge joins and forfeits both
+    adaptations. Mention rows are deliberately NOT deduplicated (a page
+    may mention the same id twice): every consumer is a pair-distinct, a
+    dropDuplicates, the dictionary key distinct or the global A1 dedup —
     re-deduplicating here would be a wasted shuffle.
 
-    The per-kind tables are plain ``persist()``-ed. (A localCheckpoint
+    The mention stream is plain ``persist()``-ed. (A localCheckpoint
     variant was measured and REJECTED: under AQE, ``Dataset.checkpoint``
     pre-executes the adaptive plan inside ``toRdd`` — the full page scan ran
     serially on the driver thread at wrapper-construction time, costing
@@ -148,20 +146,25 @@ def linked_mentions(
     # the mention table is ~1000× smaller than pages; re-bucketing it to a
     # size-appropriate partition count before caching caps the task count
     # of every downstream branch (task dispatch is the driver's serial
-    # bottleneck — 15 branches × input partitions tasks otherwise)
+    # bottleneck)
     if mention_partitions:
         mentions = mentions.repartition(mention_partitions)
     mentions = mentions.persist()
-    # With defer_barrier=True the scan starts here, before any per-kind
-    # plan is built (driver time that would delay it), and runs in a
-    # background thread behind MentionTables.join_barrier(): the caller
-    # constructs its (py4j-round-trip-heavy) downstream plan WHILE
-    # executors run the scan, and joins the barrier before triggering any
-    # action. That driver time is core-count-independent, so hiding it
-    # behind the scan buys wall time at every cluster size. Only the plain
-    # count runs concurrently with plan construction (low driver
-    # involvement); the Catalyst-heavy cache queries run after it.
-    join_scan = _in_background(mentions.count) if defer_barrier else None
+    # The scan starts here, before any view or downstream plan is built,
+    # and runs on a background thread behind MentionTables.join_barrier():
+    # the caller constructs its (py4j-round-trip-heavy) downstream plan
+    # WHILE executors run the scan. That driver time is
+    # core-count-independent, so hiding it behind the scan buys wall time
+    # at every cluster size.
+    #
+    # The cache must be populated BEFORE any downstream action. Downstream,
+    # AQE materializes query stages CONCURRENTLY and independently; if the
+    # cache is still lazy at that point, each racing stage recomputes the
+    # full extract+scan kernel for partitions whose cache block isn't
+    # populated yet — measured as a ~2× wall regression at 8 cores (and
+    # worse with more cores: more concurrent stages, more duplicated
+    # scans).
+    join_scan = _in_background(mentions.count)
 
     m_cve = mentions.filter(F.col("kind") == "cve").select(
         "url", F.col("canonical_id").alias("cve")
@@ -188,25 +191,6 @@ def linked_mentions(
             "inner",
         )
         .select("url", "capec_id")
-    )
-    # any entity kind links (R7 full catalog): groups, software, campaigns,
-    # mitigations, tactics — not just techniques
-    ent_ids = dims.attack_ents.select(F.col("ID").alias("att_id"))
-    m_attack = (
-        mentions.filter(F.col("kind") == "attack")
-        .join(F.broadcast(ent_ids), F.col("canonical_id") == F.col("att_id"), "inner")
-        .select("url", "att_id")
-    )
-    # d3fend ids link through the d3fend-id column of the dictionary (R8)
-    m_d3fend = (
-        mentions.filter(F.col("kind") == "d3fend")
-        .join(
-            F.broadcast(dims.d3fend.select(
-                F.col("d3fend_id").alias("_did"), F.col("id").alias("d3_id"))),
-            F.col("canonical_id") == F.col("_did"),
-            "inner",
-        )
-        .select("url", "d3_id")
     )
     # exact CPE ids: J1 left lookup (dictionary_found flag)
     cpe_exact = (
@@ -259,77 +243,9 @@ def linked_mentions(
         "cve": m_cve,
         "cwe": m_cwe,
         "capec": m_capec,
-        "attack": m_attack,
-        "d3fend": m_d3fend,
         "cpe": m_cpe,
     })
-    # the co-mention families and the R1/R4 emissions read these four
-    # per-kind tables; persisting them (they are mention-sized, tiny
-    # relative to pages) lets every branch read a materialized cache
-    # instead of re-driving its own broadcast exchange. attack/d3fend are
-    # NOT persisted: build_triples takes those record batches from the
-    # driver-held dims (the tables remain constructible for direct
-    # callers, just lazy).
-    kinds = ("cve", "cwe", "capec", "cpe")
-    # per-kind tables are each a ~1/6 filter of the mention stream; caching
-    # them at the full mention partition count makes EVERY downstream probe
-    # stage pay the full task fan-out for a fraction of the rows. Partition
-    # them proportionally to their share (floor 2 keeps parallelism for
-    # skewed kinds) — coalesce is narrow, so no extra shuffle; at any scale
-    # the per-kind per-partition row count stays ~the mention table's.
-    kp = max(2, mention_partitions // 4) if mention_partitions else None
-    for k in kinds:
-        out[k] = (out[k].coalesce(kp) if kp else out[k]).persist()
-
-    # Materialize the mention cache AND the per-kind caches BEFORE any
-    # downstream action. Downstream, AQE materializes query stages
-    # CONCURRENTLY and independently; if a cache is still lazy at that
-    # point, each racing stage recomputes the full extract+scan kernel for
-    # partitions whose cache block isn't populated yet — measured as a ~2×
-    # wall regression at 8 cores (and worse with more cores: more
-    # concurrent stages, more duplicated scans).
-
-    def _store_kinds(alongside=None):
-        """Materialize the per-kind caches, all four kinds in parallel
-        (independent reads of the mention cache, so concurrent Spark jobs
-        instead of four latencies in a row), and run ``alongside`` on this
-        thread meanwhile. Must run AFTER the mention cache is populated
-        (racing the scan would duplicate the extract+scan kernel per
-        racing stage)."""
-        joins = [_in_background(out[k].count) for k in kinds]
-        errs: list[BaseException] = []
-        result = None
-        try:
-            result = alongside() if alongside is not None else None
-        except BaseException as e:
-            errs.append(e)
-        for join in joins:
-            try:
-                join()
-            except BaseException as e:
-                errs.append(e)
-        if errs:
-            # surface EVERY failure, not just the first: concurrent
-            # failures can have different root causes and hiding the
-            # others masks the real one
-            primary = errs[0]
-            for extra in errs[1:]:
-                primary.add_note(
-                    f"additional concurrent kind-cache failure: "
-                    f"{type(extra).__name__}: {extra}"
-                )
-            raise primary
-        return result
-
-    if defer_barrier:
-        def barrier(alongside):
-            join_scan()
-            return _store_kinds(alongside)
-
-        out._barrier_fn = barrier
-    else:
-        mentions.count()
-        _store_kinds()
+    out._join_scan = join_scan
     return out
 
 
@@ -433,18 +349,17 @@ def build_triples(
 
     ``mentions``: pass the tables from a prior ``linked_mentions`` call to
     reuse its persisted stage (a fresh call would build new UDF plans that
-    miss Spark's cache-by-plan matching and re-run the whole scan)."""
-    m = mentions or linked_mentions(
-        spark, pages, dims, mention_partitions, defer_barrier=True,
-    )
+    miss Spark's cache-by-plan matching and re-run the whole scan). Either
+    way the scan barrier is joined before this returns."""
+    m = mentions or linked_mentions(spark, pages, dims, mention_partitions)
     m_cve, m_cwe, m_capec, m_cpe = (
         m["cve"], m["cwe"], m["capec"], m["cpe"],
     )
 
     # TWO HALVES. The mention half (R1, the co-mention edges of R3/R4/R6,
-    # the R4 records) reads the per-kind caches, and its plan is built
-    # here while the scan runs. The record half (R2, R5–R8) is bounded by
-    # the dictionaries: at the barrier one job collects the mentioned
+    # the R4 records) reads the mention views, and its plan is built here
+    # while the scan runs. The record half (R2, R5–R8) is bounded by the
+    # dictionaries: after the barrier one job collects the mentioned
     # dictionary keys (_dictionary_keys), and every record batch is then
     # taken from the driver-held dims, so none of them re-reads the
     # mention cache. Sharing one (kind, id) distinct across the gates as
@@ -509,12 +424,11 @@ def build_triples(
     parts.append(PT.emit(cpe_records, PT.cpe_record_elements(rec_uri)))
 
     # join the scan barrier (started by linked_mentions while the plan
-    # above was built) before handing any plan to the caller: an action
-    # must never race the cache population. While the per-kind caches
-    # fill, this thread collects the mentioned dictionary keys and builds
-    # the record half.
-    parts.append(m.join_barrier(lambda: _dictionary_records(
-        spark, dims, _dictionary_keys(spark, dims, m["mentions"]))))
+    # above was built) before running the key job or handing any plan to
+    # the caller: an action must never race the cache population
+    m.join_barrier()
+    keys = _dictionary_keys(spark, dims, m["mentions"])
+    parts.append(_dictionary_records(spark, dims, keys))
     return PT.repair_and_dedup(PT._union(parts))
 
 

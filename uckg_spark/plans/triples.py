@@ -400,12 +400,6 @@ def emit_attack_relationships(ent_df: DataFrame, rel_df: DataFrame) -> DataFrame
     ])
 
 
-def emit_attack_batch(ent_df: DataFrame, rel_df: DataFrame) -> DataFrame:
-    return emit_attack_entities(ent_df).unionByName(
-        emit_attack_relationships(ent_df, rel_df)
-    )
-
-
 # ---------------------------------------------------------------------------
 # CAPEC batch (mapping/capec/capec_rml.ttl)
 # ---------------------------------------------------------------------------
@@ -479,25 +473,3 @@ def emit_d3fend_batch(d3_dim: DataFrame) -> DataFrame:
         type_el(off_uri, T.CL_ATTACK),
     ])
 
-
-def emit_all_dictionary_batches(
-    cve_dim: DataFrame,
-    cwe_dim: DataFrame,
-    cpe_dim: DataFrame,
-    attack_ents: DataFrame,
-    attack_rels: DataFrame,
-    capec_dim: DataFrame,
-    d3_dim: DataFrame,
-) -> DataFrame:
-    """U2: union of all per-source batches + F3 repair + A1 dedup — the
-    full-dictionary parity surface (what the reference emits for its whole
-    dictionary corpus)."""
-    records, cwe_pairs, cpe_pairs = build_cve_stage(cve_dim, cwe_dim, cpe_dim)
-    all_t = _union([
-        emit_cve_batch(records, cwe_pairs, cpe_pairs),
-        emit_cwe_batch(cwe_dim),
-        emit_attack_batch(attack_ents, attack_rels),
-        emit_capec_batch(capec_dim),
-        emit_d3fend_batch(d3_dim),
-    ])
-    return repair_and_dedup(all_t)
